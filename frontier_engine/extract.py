@@ -254,9 +254,11 @@ def with_extractions(
             }
             for name in wanted:
                 out[name] = computed[name]
-            yield out
+            # schema order, so correctness never rests on Arrow's by-name
+            # column assignment (keep_cols/extract_cols may come in any order)
+            yield out[out_names]
 
-    return pages.mapInPandas(run, schema=out_schema).select(*out_names)
+    return pages.mapInPandas(run, schema=out_schema)
 
 
 # -- native-expression operators (no Python worker; SURVEY §2.3) -------------

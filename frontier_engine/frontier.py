@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import math
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,6 +44,7 @@ from frontier_engine.politeness import (
     robots_blocked_col,
     salted_repartition,
 )
+from frontier_engine.session import run_concurrently
 from frontier_engine.storage import SnapshotStore
 
 
@@ -158,17 +158,25 @@ def seeds_to_frontier(spark: SparkSession, seed_urls) -> DataFrame:
     df = df.withColumn("url_key", surt_key_udf("url")).filter(F.col("url_key").isNotNull())
     w = Window.partitionBy("url_key").orderBy("seed_index")
     df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    return _frontier_rows(df, depth=0, score=1.0, ts=0.0, seed_index=F.col("seed_index"))
+
+
+def _frontier_rows(df: DataFrame, depth, score, ts: float, seed_index=None) -> DataFrame:
+    """New pending frontier rows, FRONTIER_COLS order, from (url, url_key)
+    rows: host from the url, attempt 0, not_before = discovered_ts = ``ts``
+    (virtual seconds).  ``depth``/``score`` are values or Columns;
+    ``seed_index`` is NULL unless given (discovered, robots, sitemap rows)."""
     return df.select(
         "url",
         "url_key",
         host_col(F.col("url")).alias("host"),
-        F.lit(0).cast(IntegerType()).alias("depth"),
-        F.lit(1.0).cast(DoubleType()).alias("score"),
+        F.lit(depth).cast(IntegerType()).alias("depth"),
+        F.lit(score).cast(DoubleType()).alias("score"),
         F.lit("pending").alias("status"),
         F.lit(0).cast(IntegerType()).alias("attempt"),
-        F.lit(0.0).cast(DoubleType()).alias("not_before"),  # virtual seconds
-        "seed_index",
-        F.lit(0.0).cast(DoubleType()).alias("discovered_ts"),
+        F.lit(ts).cast(DoubleType()).alias("not_before"),
+        (F.lit(None).cast(LongType()) if seed_index is None else seed_index).alias("seed_index"),
+        F.lit(ts).cast(DoubleType()).alias("discovered_ts"),
     )
 
 
@@ -261,6 +269,15 @@ def run_crawl(
     # covers) — filled from the aux artifact when one is valid for cfg
     resumed_bloom: DataFrame | None = None
     resumed_bloom_round = -1
+    # the aux marker names the hash scheme too: bitmaps hashed another way
+    # (an older store) are rebuilt, never probed
+    bloom_meta = {"n_shards": cfg.bloom_shards, "m_bits": cfg.bloom_bits_per_shard, "hash": seenmod.HASH_SCHEME}
+
+    def bloom_add(shards: DataFrame, new: DataFrame) -> DataFrame:
+        return seenmod.add_keys(
+            shards, new, m_bits=cfg.bloom_bits_per_shard, n_shards=cfg.bloom_shards
+        ).localCheckpoint(eager=True)
+
     if store is not None and (last := store.latest_round()) is not None:
         frontier = store.read(last, "frontier")
         pages_parts = [store.read(r, "pages") for r in range(last + 1) if store.has(r, "pages")]
@@ -271,21 +288,17 @@ def run_crawl(
             # still usable — the gap rounds delta-merge on top (O(delta)),
             # never a full O(M) rebuild
             for r in range(last, -1, -1):
-                aux = store.read_aux(
-                    r, "bloom",
-                    expect_meta={"n_shards": cfg.bloom_shards, "m_bits": cfg.bloom_bits_per_shard},
-                )
+                aux = store.read_aux(r, "bloom", expect_meta=bloom_meta)
                 if aux is not None:
                     resumed_bloom, resumed_bloom_round = aux, r
                     break
             if resumed_bloom is not None:
-                for r, df in seen_rounds:
-                    if r > resumed_bloom_round:
-                        delta = seenmod.build_bloom_shards(
-                            df, n_shards=cfg.bloom_shards, m_bits=cfg.bloom_bits_per_shard
-                        )
-                        resumed_bloom = seenmod.merge_shards(resumed_bloom, delta)
-                resumed_bloom = resumed_bloom.localCheckpoint(eager=True)
+                # the rounds after the aux top it up in one pass
+                gap = [df for r, df in seen_rounds if r > resumed_bloom_round]
+                if gap:
+                    resumed_bloom = bloom_add(resumed_bloom, _union_all(gap))
+                else:
+                    resumed_bloom = resumed_bloom.localCheckpoint(eager=True)
         # metrics format is versioned in the manifest (ADVICE r2): v1
         # snapshots (no 'metrics_format' key) stored CUMULATIVE metrics, so
         # unioning every round would double-count — keep only the LAST
@@ -321,20 +334,10 @@ def run_crawl(
         seed_ingest_sec = round(time.perf_counter() - t0, 3)
 
     def seen_view() -> DataFrame:
-        if not seen_parts:
-            return empty_seen
-        out = seen_parts[0]
-        for p in seen_parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(seen_parts) if seen_parts else empty_seen
 
     def metrics_view() -> DataFrame:
-        if not metrics_parts:
-            return empty_metrics
-        out = metrics_parts[0]
-        for p in metrics_parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(metrics_parts) if metrics_parts else empty_metrics
 
     now = start_round * cfg.round_seconds
     rounds_run = 0
@@ -455,7 +458,6 @@ def run_crawl(
             )
             excl_flags.append(F.coalesce(F.col("__trap_hit"), F.lit(False)))
         cand = cand.persist()
-        blocked_keys = None
         if excl_flags:
             # excluded rows (robots-blocked, trap-templated) leave the
             # frontier permanently (else they would stay pending forever
@@ -463,7 +465,6 @@ def run_crawl(
             flag = excl_flags[0]
             for e in excl_flags[1:]:
                 flag = flag | e
-            blocked_keys = cand.filter(flag).select("url_key")
             cand_ok = cand.filter(~flag).drop("__robots_blocked", "__trap_hit")
         else:
             cand_ok = cand
@@ -521,18 +522,12 @@ def run_crawl(
             )
         )
         leftover = frontier.filter((F.col("status").isin("pending", "retry")) & (F.col("not_before") > F.lit(now)))
-        # rows not selected this round (over quota / bloom-deferred) stay
-        # pending.  ONE anti-join against the UNION of exclusion key sets
-        # (selected, just-seen-via-dup-key, robots-blocked) — three chained
-        # anti-joins were three sequential shuffle stages for identical
-        # semantics, and the per-round stage count is the constant the
-        # scaling gate pays (union is shuffle-free; anti-join ignores
-        # duplicate keys on the build side)
-        selected_keys = batch.select("url_key")
-        exclude = selected_keys.unionByName(seen_df.select("url_key"))
-        if blocked_keys is not None:
-            exclude = exclude.unionByName(blocked_keys)
-        not_selected = pending.join(exclude, "url_key", "left_anti").select(*FRONTIER_COLS)
+        # rows not selected this round (over quota) stay pending.  The
+        # cached cand_ok already holds exactly the pending rows that are
+        # unseen and not excluded, and frontier keys are unique, so one
+        # anti-join against the batch keys finishes the set — the seen
+        # store is not scanned or shuffled a second time
+        not_selected = cand_ok.join(batch.select("url_key"), "url_key", "left_anti").select(*FRONTIER_COLS)
         next_frontier = leftover.select(*FRONTIER_COLS).unionByName(not_selected).unionByName(retry_rows.select(*FRONTIER_COLS))
 
         if cfg.max_depth > 0:
@@ -660,10 +655,7 @@ def run_crawl(
             if cfg.use_bloom and bloom_shards is not None:
                 # keep the standing bitmaps current — a stale filter would
                 # return false negatives for keys seen THIS round
-                delta = seenmod.build_bloom_shards(
-                    seen_parts[-1], n_shards=cfg.bloom_shards, m_bits=cfg.bloom_bits_per_shard
-                )
-                bloom_shards = seenmod.merge_shards(bloom_shards, delta).localCheckpoint(eager=True)
+                bloom_shards = bloom_add(bloom_shards, seen_parts[-1])
                 if cfg.persist_bloom_every and round_no % cfg.persist_bloom_every == 0:
                     # aux write AFTER the manifest publish: the merged
                     # filter covers exactly seen rounds <= round_no (the
@@ -672,51 +664,38 @@ def run_crawl(
                     timed(
                         "bloom_persist",
                         round_no,
-                        lambda: store.write_aux(
-                            round_no, "bloom", bloom_shards,
-                            meta={"n_shards": cfg.bloom_shards, "m_bits": cfg.bloom_bits_per_shard},
-                        ),
+                        lambda: store.write_aux(round_no, "bloom", bloom_shards, meta=bloom_meta),
                     )
         else:
             # the three small-state checkpoints (seen delta, frontier,
-            # metrics delta) are independent jobs — run them CONCURRENTLY so
-            # the per-round constant is one job latency, not three.
-            # page_rows is a projection of the already-checkpointed
-            # `extracted`: no second write of the heavy bytes.
+            # metrics delta) are independent jobs — run them CONCURRENTLY
+            # (the same helper as the store's commit) so the per-round
+            # constant is one job latency, not three.  page_rows is a
+            # projection of the already-checkpointed `extracted`: no second
+            # write of the heavy bytes.
             t0 = time.perf_counter()
             prev_shards = bloom_shards
 
             def seen_then_bloom():
-                # chain the O(delta) bloom merge on the CHECKPOINTED seen
-                # delta — building it from the raw new_seen would re-run the
+                # chain the O(delta) bloom top-up on the CHECKPOINTED seen
+                # delta — reading the raw new_seen would re-run the
                 # dropDuplicates shuffle a second time in parallel
                 ck = timed("ckpt_seen_delta", round_no, lambda: new_seen.localCheckpoint(eager=True))
-                merged = None
                 if cfg.use_bloom and prev_shards is not None:
-                    delta = seenmod.build_bloom_shards(
-                        ck, n_shards=cfg.bloom_shards, m_bits=cfg.bloom_bits_per_shard
-                    )
-                    merged = timed(
-                        "bloom_merge",
-                        round_no,
-                        lambda: seenmod.merge_shards(prev_shards, delta).localCheckpoint(eager=True),
-                    )
-                return ck, merged
+                    return ck, timed("bloom_merge", round_no, lambda: bloom_add(prev_shards, ck))
+                return ck, None
 
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_seen = pool.submit(seen_then_bloom)
-                f_front = pool.submit(
-                    lambda: timed("ckpt_frontier", round_no, lambda: next_frontier.localCheckpoint(eager=True))
-                )
-                f_metrics = pool.submit(
-                    lambda: timed("ckpt_metrics", round_no, lambda: m.localCheckpoint(eager=True))
-                )
-                seen_ck, merged_shards = f_seen.result()
-                seen_parts.append(seen_ck)
-                if merged_shards is not None:
-                    bloom_shards = merged_shards
-                next_frontier = f_front.result()
-                metrics_parts.append(f_metrics.result())
+            done = run_concurrently(spark, {
+                "seen": seen_then_bloom,
+                "frontier": lambda: timed("ckpt_frontier", round_no, lambda: next_frontier.localCheckpoint(eager=True)),
+                "metrics": lambda: timed("ckpt_metrics", round_no, lambda: m.localCheckpoint(eager=True)),
+            })
+            seen_ck, merged_shards = done["seen"]
+            seen_parts.append(seen_ck)
+            if merged_shards is not None:
+                bloom_shards = merged_shards
+            next_frontier = done["frontier"]
+            metrics_parts.append(done["metrics"])
             timings.append((round_no, "ckpt_small", round(time.perf_counter() - t0, 3)))
             pages_parts.append(page_rows)
 
@@ -731,12 +710,7 @@ def run_crawl(
         frontier = next_frontier
         now += cfg.round_seconds
 
-    if pages_parts:
-        pages_out = pages_parts[0]
-        for p in pages_parts[1:]:
-            pages_out = pages_out.unionByName(p)
-    else:
-        pages_out = spark.createDataFrame([], _EMPTY_PAGES_DDL)
+    pages_out = _union_all(pages_parts) if pages_parts else spark.createDataFrame([], _EMPTY_PAGES_DDL)
     return CrawlResult(
         pages=pages_out, seen=seen_view(), frontier=frontier, metrics=metrics_view(),
         rounds=rounds_run, timings=timings,
@@ -750,6 +724,13 @@ _EMPTY_PAGES_DDL = (
     "tables array<array<array<string>>>, page_metadata map<string,string>, "
     "json_ld array<string>, content_hash string"
 )
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def _expand_links(extracted: DataFrame, cfg: CrawlConfig, now: float) -> DataFrame:
@@ -781,26 +762,12 @@ def _expand_links(extracted: DataFrame, cfg: CrawlConfig, now: float) -> DataFra
     # sum-of-partial-sums preserves the OPIC contribution exactly
     links = links.groupBy("url").agg(F.sum("contrib").alias("contrib"), F.min("depth").alias("depth"))
     links = links.withColumn("url_key", surt_key_udf("url")).filter(F.col("url_key").isNotNull())
-    return (
-        links.groupBy("url_key")
-        .agg(
-            F.min_by("url", "url").alias("url"),  # deterministic representative
-            F.sum("contrib").alias("score"),
-            F.min("depth").alias("depth"),
-        )
-        .select(
-            "url",
-            "url_key",
-            host_col(F.col("url")).alias("host"),
-            F.col("depth").cast(IntegerType()),
-            F.col("score").cast(DoubleType()),
-            F.lit("pending").alias("status"),
-            F.lit(0).cast(IntegerType()).alias("attempt"),
-            F.lit(now).cast(DoubleType()).alias("not_before"),
-            F.lit(None).cast(LongType()).alias("seed_index"),
-            F.lit(now).cast(DoubleType()).alias("discovered_ts"),
-        )
+    links = links.groupBy("url_key").agg(
+        F.min_by("url", "url").alias("url"),  # deterministic representative
+        F.sum("contrib").alias("score"),
+        F.min("depth").alias("depth"),
     )
+    return _frontier_rows(links, depth=F.col("depth"), score=F.col("score"), ts=now)
 
 
 def _robots_seed_rows(frontier: DataFrame) -> DataFrame:
@@ -817,18 +784,7 @@ def _robots_seed_rows(frontier: DataFrame) -> DataFrame:
     )
     robots = robots.withColumn("url_key", surt_key_udf("url")).filter(F.col("url_key").isNotNull())
     robots = robots.join(frontier.select("url_key"), "url_key", "left_anti")
-    return robots.select(
-        "url",
-        "url_key",
-        host_col(F.col("url")).alias("host"),
-        F.lit(0).cast(IntegerType()).alias("depth"),
-        F.lit(ROBOTS_FETCH_SCORE).cast(DoubleType()).alias("score"),
-        F.lit("pending").alias("status"),
-        F.lit(0).cast(IntegerType()).alias("attempt"),
-        F.lit(0.0).cast(DoubleType()).alias("not_before"),
-        F.lit(None).cast(LongType()).alias("seed_index"),
-        F.lit(0.0).cast(DoubleType()).alias("discovered_ts"),
-    )
+    return _frontier_rows(robots, depth=0, score=ROBOTS_FETCH_SCORE, ts=0.0)
 
 
 def _dim_page_rows(extracted: DataFrame) -> DataFrame:
@@ -867,22 +823,8 @@ def _discovered_sitemap_rows(dim_pages: DataFrame, now: float) -> DataFrame:
         .agg(F.max("score").alias("score"))
     )
     links = links.withColumn("url_key", surt_key_udf("url")).filter(F.col("url_key").isNotNull())
-    return (
-        links.groupBy("url_key")
-        .agg(F.min_by("url", "url").alias("url"), F.max("score").alias("score"))
-        .select(
-            "url",
-            "url_key",
-            host_col(F.col("url")).alias("host"),
-            F.lit(0).cast(IntegerType()).alias("depth"),
-            F.col("score").cast(DoubleType()),
-            F.lit("pending").alias("status"),
-            F.lit(0).cast(IntegerType()).alias("attempt"),
-            F.lit(now).cast(DoubleType()).alias("not_before"),
-            F.lit(None).cast(LongType()).alias("seed_index"),
-            F.lit(now).cast(DoubleType()).alias("discovered_ts"),
-        )
-    )
+    links = links.groupBy("url_key").agg(F.min_by("url", "url").alias("url"), F.max("score").alias("score"))
+    return _frontier_rows(links, depth=0, score=F.col("score"), ts=now)
 
 
 def _learned_robots_policy(dim_pages: DataFrame) -> DataFrame:

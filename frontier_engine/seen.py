@@ -17,10 +17,15 @@ Design for 10^10 keys:
   membership test is a cogrouped ``applyInPandas`` join on shard_id, so no
   bitmap ever has to fit on the driver (at 10^10 keys / 1% fp the full
   filter is ~12 GB; 4096 shards of ~3 MB each spread across executors).
-* Bloom hashing uses blake2b-derived double hashing (h1 + i*h2), purely
-  Python-side and identical at build and probe time; xxhash64 is used only
-  for shard ROUTING so Spark-native and UDF-side routing agree via the
-  JVM function.
+* Bloom hashing runs in the JVM: two ``xxhash64`` columns, each seeded by
+  its own salt, give the double-hashing words h1, h2 (positions
+  h1 + i*h2 mod m_bits, in wrapping uint64).  Only those longs cross into
+  ``applyInPandas``; Python does the position arithmetic with numpy alone.
+  The salts keep both words independent of the unsalted
+  ``pmod(xxhash64(key))`` that ROUTES a key to its shard — reusing that
+  hash would tie bit positions to the shard id.  ``HASH_SCHEME`` names the
+  scheme; persisted bitmaps carry it in their marker, so a bitmap hashed
+  another way is rebuilt, never probed.
 
 At small scale the exact anti-join alone wins; ``use_bloom`` is a knob, and
 correctness tests run both paths and assert identical results.
@@ -28,7 +33,6 @@ correctness tests run both paths and assert identical results.
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
@@ -55,38 +59,44 @@ SHARD_SCHEMA = StructType(
 K_HASHES = 7  # ~optimal for 1% fp: k = m/n ln2 with m/n ≈ 9.6
 
 
-def _bit_positions(key: str, m_bits: int) -> np.ndarray:
-    """K_HASHES positions via double hashing of blake2b-128(key).
-
-    h1 + i*h2 wraps modulo 2^64 FIRST (matching the uint64 arithmetic of
-    ``_bit_positions_batch``) — with byte-aligned but non-power-of-two
-    m_bits, Python's arbitrary-precision sum would otherwise disagree with
-    the batch path and introduce bloom false negatives (seen URLs
-    re-crawled)."""
-    d = hashlib.blake2b(key.encode("utf-8"), digest_size=16).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:], "little") | 1
-    return np.array(
-        [((h1 + i * h2) & 0xFFFFFFFFFFFFFFFF) % m_bits for i in range(K_HASHES)],
-        dtype=np.int64,
-    )
-
-
+HASH_SCHEME = "xxhash64-salted-v1"
+_SALTS = ("bloom-h1", "bloom-h2")
+_H_COLS = ["__h1", "__h2"]
 _I_RANGE = np.arange(K_HASHES, dtype=np.uint64)
 
 
-def _bit_positions_batch(keys, m_bits: int) -> np.ndarray:
-    """(n, K_HASHES) position matrix — one vectorized broadcast instead of a
-    numpy-array build per key (the per-key path was the probe hot spot)."""
-    n = len(keys)
-    h1 = np.empty(n, dtype=np.uint64)
-    h2 = np.empty(n, dtype=np.uint64)
-    blake = hashlib.blake2b
-    for j, key in enumerate(keys):
-        d = blake(key.encode("utf-8"), digest_size=16).digest()
-        h1[j] = int.from_bytes(d[:8], "little")
-        h2[j] = int.from_bytes(d[8:], "little") | 1
+def _hash_cols(key_col: str) -> list:
+    """The two salted JVM hash words of ``key_col``, as long columns."""
+    return [F.xxhash64(F.lit(salt), F.col(key_col)).alias(c) for salt, c in zip(_SALTS, _H_COLS)]
+
+
+def _positions(h1, h2, m_bits: int) -> np.ndarray:
+    """(n, K_HASHES) bit positions h1 + i*h2 mod m_bits.  The sum wraps
+    modulo 2^64 before the final mod, so a byte-aligned m_bits that is not
+    a power of two places a key's bits identically at build and probe."""
+    h1 = np.asarray(h1, dtype=np.int64).view(np.uint64)
+    h2 = np.asarray(h2, dtype=np.int64).view(np.uint64) | np.uint64(1)
     return ((h1[:, None] + _I_RANGE[None, :] * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
+
+
+def _hashed_keys(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
+    """(shard_id, __h1, __h2) per non-null key: all a bitmap fill reads."""
+    return with_shard_id(df.filter(F.col(key_col).isNotNull()), key_col, n_shards).select(
+        "shard_id", *_hash_cols(key_col)
+    )
+
+
+def _fill(shard_id, bitmap: np.ndarray, n_keys: int, keys: pd.DataFrame) -> pd.DataFrame:
+    """OR the bits of ``keys`` (hash-word rows) into ``bitmap``; one
+    SHARD_SCHEMA row."""
+    if len(keys):
+        pos = _positions(keys["__h1"], keys["__h2"], len(bitmap) * 8).ravel()
+        # unbuffered |= — two hash positions may share a byte; plain
+        # fancy-assignment would keep only one of the bits
+        np.bitwise_or.at(bitmap, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+    return pd.DataFrame(
+        {"shard_id": [int(shard_id)], "n_keys": [int(n_keys) + len(keys)], "bitmap": [bitmap.tobytes()]}
+    )
 
 
 def bits_for(expected_keys_per_shard: int, fp_rate: float = 0.01) -> int:
@@ -105,8 +115,8 @@ def build_bloom_shards(
     """(shard_id, n_keys, bitmap) — one row per non-empty shard.
 
     Build = one shuffle on shard_id, then a vectorized per-group bitmap
-    fill.  Incremental growth: union new keys, rebuild only the shards they
-    land in (callers diff on shard_id), or OR-merge with ``merge_shards``.
+    fill.  Incremental growth: OR new keys into standing shards with
+    ``add_keys`` (one pass), or OR-merge two built sets with ``merge_shards``.
 
     Size shards by capacity (``m_bits`` directly or ``expected_per_shard``)
     — counting the seen set to autosize costs a full extra action per round;
@@ -118,26 +128,36 @@ def build_bloom_shards(
             expected_per_shard = max(1024, int(total / n_shards * 1.5))
         m_bits = bits_for(expected_per_shard, fp_rate)
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-        keys = pdf[key_col].dropna()
-        if len(keys):
-            pos = _bit_positions_batch(list(keys), m_bits).ravel()
-            # unbuffered |= — two hash positions may share a byte; plain
-            # fancy-assignment would keep only one of the bits
-            np.bitwise_or.at(bitmap, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "n_keys": [len(keys)],
-                "bitmap": [bitmap.tobytes()],
-            }
-        )
+    def build(key, pdf):
+        return _fill(key[0], np.zeros(m_bits // 8, dtype=np.uint8), 0, pdf)
 
     return (
-        with_shard_id(seen.select(key_col), key_col, n_shards)
+        _hashed_keys(seen, key_col, n_shards)
         .groupBy("shard_id")
         .applyInPandas(build, schema=SHARD_SCHEMA)
+    )
+
+
+def add_keys(
+    shards: DataFrame, new: DataFrame, m_bits: int, key_col: str = "url_key", n_shards: int = 64
+) -> DataFrame:
+    """``shards`` with the keys of ``new`` OR-ed in, in ONE cogroup pass:
+    the same rows, byte for byte, as ``merge_shards(shards,
+    build_bloom_shards(new, ...))``, without the intermediate delta filter
+    (which costs a second shuffle and a second Python stage).  Shards that
+    ``new`` does not touch pass through; shards only ``new`` touches start
+    from an empty ``m_bits`` bitmap."""
+
+    def top_up(key, standing, keys):
+        if len(standing) == 0:
+            return _fill(key[0], np.zeros(m_bits // 8, dtype=np.uint8), 0, keys)
+        bitmap = np.frombuffer(standing["bitmap"].iloc[0], dtype=np.uint8).copy()
+        return _fill(key[0], bitmap, standing["n_keys"].iloc[0], keys)
+
+    return (
+        shards.groupBy("shard_id")
+        .cogroup(_hashed_keys(new, key_col, n_shards).groupBy("shard_id"))
+        .applyInPandas(top_up, schema=SHARD_SCHEMA)
     )
 
 
@@ -169,21 +189,22 @@ def bloom_maybe_seen(candidates: DataFrame, shards: DataFrame, key_col: str = "u
     """
     out_fields = candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
     out_schema = StructType(out_fields)
-    cand = with_shard_id(candidates, key_col, n_shards)
+    cand = with_shard_id(candidates, key_col, n_shards).select("*", *_hash_cols(key_col))
 
     def probe(cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        cand_pdf = cand_pdf.drop(columns=["shard_id"])
+        hashes = cand_pdf[_H_COLS]
+        cand_pdf = cand_pdf.drop(columns=["shard_id", *_H_COLS])
         if len(cand_pdf) == 0:
             return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
         if len(shard_pdf) == 0:
             return cand_pdf.assign(maybe_seen=False)
         bitmap = np.frombuffer(shard_pdf["bitmap"].iloc[0], dtype=np.uint8)
-        m_bits = len(bitmap) * 8
-        keys = cand_pdf[key_col]
-        mask = keys.notna().to_numpy()
-        flags = np.zeros(len(keys), dtype=bool)
+        # a null key is never seen (xxhash64 skips nulls, so its hash words
+        # are those of the bare salt, which must not be probed)
+        mask = cand_pdf[key_col].notna().to_numpy()
+        flags = np.zeros(len(cand_pdf), dtype=bool)
         if mask.any():
-            pos = _bit_positions_batch(list(keys[mask]), m_bits)  # (n, K)
+            pos = _positions(hashes["__h1"][mask], hashes["__h2"][mask], len(bitmap) * 8)  # (n, K)
             hit = (bitmap[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
             flags[mask] = hit.all(axis=1)
         return cand_pdf.assign(maybe_seen=flags)
@@ -269,7 +290,8 @@ def filter_unseen(
     loops that validated the store once at load time pass False.
     """
     if not use_bloom or shards is None:
-        return candidates.join(seen.select(key_col).distinct(), key_col, "left_anti")
+        # no distinct(): an anti-join ignores duplicate build-side keys
+        return candidates.join(seen.select(key_col), key_col, "left_anti")
     if prune_shard_col is not None and validate_shards:
         validate_shard_contract(seen, key_col, prune_shard_col, n_shards)
     flagged = bloom_maybe_seen(candidates, shards, key_col, n_shards)
@@ -291,7 +313,7 @@ def filter_unseen(
         ]
         if len(pos_shards) < n_shards:  # all shards hit → filter is a no-op
             seen_side = seen.filter(F.col(prune_shard_col).isin(pos_shards))
-    confirmed_unseen = positives.join(seen_side.select(key_col).distinct(), key_col, "left_anti")
+    confirmed_unseen = positives.join(seen_side.select(key_col), key_col, "left_anti")
     return negatives.unionByName(confirmed_unseen)
 
 

@@ -9,7 +9,9 @@ partition sizing.  On a real cluster the same builder is used by
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 # Large Arrow batches amortize Python-worker overhead for the extract UDFs;
@@ -67,3 +69,17 @@ def _parallelism_of(master: str) -> int:
         except ValueError:
             return 8
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def run_concurrently(spark: SparkSession, tasks: dict) -> dict:
+    """Run each no-argument task of ``tasks`` on its own thread; return
+    {name: result}.
+
+    Every task inherits the caller's Spark local properties (job group,
+    description), so its jobs carry the caller's labels.  All tasks finish
+    before this returns or raises: a failing task re-raises here only after
+    the others have completed, so the caller never acts on a half-done set.
+    """
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = {name: pool.submit(inheritable_thread_target(spark)(fn)) for name, fn in tasks.items()}
+    return {name: f.result() for name, f in futures.items()}

@@ -1,10 +1,15 @@
 """Checkpoint/resume tests (north_rule: resumable with lineage + metrics)."""
 
+import hashlib
 import json
 import os
+import time
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from frontier_engine import seen as seenmod
 from frontier_engine import synth
 from frontier_engine.frontier import CrawlConfig, run_crawl
 from frontier_engine.storage import SnapshotStore
@@ -98,3 +103,124 @@ def test_crashed_round_invisible(spark, corpus, seeds, tmp_path):
     with open(os.path.join(crashed, "manifest.json"), "w") as fh:
         json.dump({"round": 99}, fh)
     assert store.latest_round() == 99
+
+
+# --- bloom aux format, failed commits, job labels ---------------------------
+
+_BLOOM = dict(round_seconds=9.0, use_bloom=True, bloom_shards=8, bloom_bits_per_shard=1 << 14, n_partitions=8)
+
+
+def _page_keys(df):
+    return sorted((r.round, r.host, r.host_rank, r.url) for r in df.select("round", "host", "host_rank", "url").collect())
+
+
+@pytest.fixture(scope="module")
+def full_bloom_crawl(spark, corpus, seeds):
+    res = run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=100))
+    return _key_set(res.seen), _page_keys(res.pages)
+
+
+def _blake2b_bitmaps(keys_by_shard: dict, m_bits: int):
+    """Bitmaps in the layout stores wrote before the JVM hash scheme:
+    double hashing over the two halves of blake2b-128(key), in Python."""
+    rows = []
+    for shard, keys in sorted(keys_by_shard.items()):
+        bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
+        for key in keys:
+            d = hashlib.blake2b(key.encode("utf-8"), digest_size=16).digest()
+            h1, h2 = int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little") | 1
+            for i in range(seenmod.K_HASHES):
+                pos = ((h1 + i * h2) & 0xFFFFFFFFFFFFFFFF) % m_bits
+                bitmap[pos >> 3] |= 1 << (pos & 7)
+        rows.append((shard, len(keys), bitmap.tobytes()))
+    return rows
+
+
+def test_resume_from_old_format_bloom_aux_rebuilds(spark, corpus, seeds, tmp_path, full_bloom_crawl):
+    """A store whose aux bitmaps were hashed the old way (blake2b, marker
+    without a hash scheme) must be rebuilt on resume, not probed: under the
+    new hashing those bitmaps give false negatives, and a negative skips
+    the exact join, so a seen URL would be fetched again."""
+    root = str(tmp_path)
+    run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=2, checkpoint_dir=root))
+    store = SnapshotStore(spark, root)
+    last = store.latest_round()
+    seen = store.read(0, "seen")
+    for r in range(1, last + 1):
+        seen = seen.unionByName(store.read(r, "seen"))
+    keys_by_shard: dict = {}
+    for r in seenmod.with_shard_id(seen, "url_key", 8).collect():
+        keys_by_shard.setdefault(r.shard_id, []).append(r.url_key)
+    old = spark.createDataFrame(_blake2b_bitmaps(keys_by_shard, 1 << 14), seenmod.SHARD_SCHEMA)
+    for r in range(last + 1):  # every round's aux now has the old format
+        store.write_aux(r, "bloom", old, meta={"n_shards": 8, "m_bits": 1 << 14})
+    probed = seenmod.bloom_maybe_seen(seen.select("url_key"), old, n_shards=8)
+    assert probed.filter(~F.col("maybe_seen")).count() > 0, "old bitmaps must not be probe-compatible"
+
+    resumed = run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=100, checkpoint_dir=root))
+    assert (_key_set(resumed.seen), _page_keys(resumed.pages)) == full_bloom_crawl
+    with open(os.path.join(root, "rounds", f"round_{store.latest_round():05d}", "aux_bloom.json")) as fh:
+        assert json.load(fh)["hash"] == seenmod.HASH_SCHEME
+
+
+def test_commit_round_write_failure_waits_and_publishes_nothing(spark, tmp_path):
+    """One table's write raises while another is still writing: commit_round
+    lets the other write finish, publishes no manifest, and re-raises."""
+    slow = F.udf(lambda x: time.sleep(1.0) or x, "long")
+    tables = {  # the failing write is collected first, the slow one last
+        "bad": spark.range(3).select(F.coalesce(F.raise_error(F.lit("injected write failure")), F.lit("x")).alias("s")),
+        "slow": spark.range(4, numPartitions=2).select(slow("id").alias("id")),
+    }
+    store = SnapshotStore(spark, str(tmp_path))
+    with pytest.raises(Exception, match="injected write failure"):
+        store.commit_round(0, tables)
+    round_dir = os.path.join(str(tmp_path), "rounds", "round_00000")
+    assert os.path.exists(os.path.join(round_dir, "slow", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(round_dir, "manifest.json"))
+    assert store.latest_round() is None
+
+
+def test_resume_after_failed_commit_equals_uninterrupted(spark, corpus, seeds, tmp_path, monkeypatch, full_bloom_crawl):
+    """Crash point: the pages write of round 1 fails inside the concurrent
+    commit.  Round 1 stays unpublished (its other tables may be on disk),
+    and a resume from the store ends exactly like an uninterrupted crawl."""
+    root = str(tmp_path)
+    commit = SnapshotStore.commit_round
+
+    def failing_commit(self, round_no, tables, extra=None):
+        if round_no == 1:
+            poisoned = F.coalesce(F.raise_error(F.lit("injected pages failure")), F.col("url"))
+            tables = {**tables, "pages": tables["pages"].withColumn("url", poisoned)}
+        return commit(self, round_no, tables, extra)
+
+    monkeypatch.setattr(SnapshotStore, "commit_round", failing_commit)
+    with pytest.raises(Exception, match="injected pages failure"):
+        run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=100, checkpoint_dir=root))
+    monkeypatch.undo()
+    store = SnapshotStore(spark, root)
+    assert store.latest_round() == 0
+    assert os.path.isdir(os.path.join(root, "rounds", "round_00001", "frontier"))
+
+    resumed = run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=100, checkpoint_dir=root))
+    assert (_key_set(resumed.seen), _page_keys(resumed.pages)) == full_bloom_crawl
+
+
+@pytest.mark.parametrize("with_store", [False, True], ids=["checkpoints", "store"])
+def test_every_crawl_job_carries_the_callers_job_group(spark, corpus, seeds, tmp_path, with_store):
+    """Jobs from the crawl's worker threads (concurrent commit writes, or the
+    storeless concurrent checkpoints and bloom top-up) carry the job group
+    the caller set, like the main thread's jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"crawl-labels-{with_store}"
+    before = max(list(tracker.getJobIdsForGroup(None)) + list(tracker.getActiveJobsIds()), default=-1)
+    cfg = CrawlConfig(**_BLOOM, max_rounds=1, checkpoint_dir=str(tmp_path) if with_store else None)
+    sc.setJobGroup(group, "one-round crawl")
+    try:
+        run_crawl(spark, corpus, seeds, cfg)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    unlabelled = [j for j in tracker.getJobIdsForGroup(None) if j > before]
+    labelled = [j for j in tracker.getJobIdsForGroup(group) if j > before]
+    assert labelled and not unlabelled, unlabelled

@@ -130,3 +130,16 @@ def test_determinism_across_runs(spark, corpus, seeds, crawl):
     a = [(r.host, r.round, r.host_rank, r.url) for r in crawl.pages.select("host", "round", "host_rank", "url").collect()]
     b = [(r.host, r.round, r.host_rank, r.url) for r in res2.pages.select("host", "round", "host_rank", "url").collect()]
     assert sorted(a) == sorted(b)
+
+
+def test_with_extractions_pruned_columns_in_schema_order(spark, corpus):
+    """keep_cols / extract_cols given out of schema order: the output comes
+    back in schema order (input columns, then EXTRACT_COLS) with the same
+    values as the full extraction."""
+    from frontier_engine.extract import with_extractions
+
+    pages = corpus.select("url", "html").limit(40)
+    pruned = with_extractions(pages, keep_cols=("html", "url"), extract_cols=("links", "extracted_text"))
+    assert pruned.columns == ["url", "html", "extracted_text", "links"]
+    full = with_extractions(pages).select(*pruned.columns)
+    assert sorted(pruned.collect()) == sorted(full.collect())

@@ -3,11 +3,11 @@
 These cover the invariants example-based tests can't sweep: canonicalization
 must be IDEMPOTENT (a canonical URL re-canonicalizes to itself — otherwise
 the seen set and frontier disagree about identity), the parser must be total
-(never raise on arbitrary input), and the bloom hash paths must agree on any
-key.  No Spark session needed — these run in milliseconds.
+(never raise on arbitrary input), and the bloom position arithmetic must
+agree with scalar double hashing for any pair of hash words.  No Spark
+session needed — these run in milliseconds.
 """
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -83,14 +83,21 @@ def test_parser_total_on_arbitrary_text(html):
     assert isinstance(extract_metadata(html), dict)
 
 
-@given(key=st.text(min_size=1, max_size=100), m_exp=st.integers(min_value=10, max_value=22))
+_LONG = st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1)
+
+
+@given(h1=_LONG, h2=_LONG, m_exp=st.integers(min_value=10, max_value=22))
 @settings(max_examples=200, deadline=None)
-def test_bloom_paths_agree_on_any_key(key, m_exp):
+def test_bloom_paths_agree_on_any_key(h1, h2, m_exp):
+    """A key reaches the bloom filter as its two JVM hash words (any signed
+    longs); the vectorized positions must equal scalar double hashing over
+    the unsigned words, wrapped mod 2^64, and stay inside the bitmap."""
     m_bits = (1 << m_exp) - 8  # byte-aligned, non-power-of-two
-    scalar = seenmod._bit_positions(key, m_bits)
-    batch = seenmod._bit_positions_batch([key], m_bits)[0]
-    assert np.array_equal(scalar, batch)
-    assert (scalar >= 0).all() and (scalar < m_bits).all()
+    u1, u2 = h1 & 0xFFFFFFFFFFFFFFFF, (h2 & 0xFFFFFFFFFFFFFFFF) | 1
+    scalar = [((u1 + i * u2) & 0xFFFFFFFFFFFFFFFF) % m_bits for i in range(seenmod.K_HASHES)]
+    batch = seenmod._positions([h1], [h2], m_bits)[0]
+    assert batch.tolist() == scalar
+    assert (batch >= 0).all() and (batch < m_bits).all()
 
 
 # ---------------------------------------------------------------------------

@@ -44,16 +44,24 @@ def test_unreserved_escapes_decode_and_hex_uppercases():
 
 
 # ---------------------------------------------------------------------------
-# bloom — scalar/batch agreement (ADVICE: dead-function divergence)
+# bloom — vectorized positions agree with scalar double hashing
 # ---------------------------------------------------------------------------
+
+
+def _scalar_positions(h1: int, h2: int, m_bits: int) -> list[int]:
+    """h1 + i*h2 over unsigned 64-bit words, wrapped mod 2^64, then mod m."""
+    h1, h2 = h1 & 0xFFFFFFFFFFFFFFFF, (h2 & 0xFFFFFFFFFFFFFFFF) | 1
+    return [((h1 + i * h2) & 0xFFFFFFFFFFFFFFFF) % m_bits for i in range(seenmod.K_HASHES)]
 
 
 def test_bit_positions_scalar_equals_batch():
     m_bits = (1 << 20) - 8  # byte-aligned, NOT a power of two
-    keys = [f"com,example)/page/{i}" for i in range(500)]
-    batch = seenmod._bit_positions_batch(keys, m_bits)
-    for j, k in enumerate(keys):
-        assert np.array_equal(seenmod._bit_positions(k, m_bits), batch[j]), k
+    rng = np.random.default_rng(7)
+    h1 = rng.integers(-(1 << 63), (1 << 63) - 1, size=500, dtype=np.int64)
+    h2 = rng.integers(-(1 << 63), (1 << 63) - 1, size=500, dtype=np.int64)
+    batch = seenmod._positions(h1, h2, m_bits)
+    for j in range(len(h1)):
+        assert batch[j].tolist() == _scalar_positions(int(h1[j]), int(h2[j]), m_bits), j
 
 
 # ---------------------------------------------------------------------------

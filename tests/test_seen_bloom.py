@@ -130,3 +130,62 @@ def test_shard_contract_validation_skippable(dfs, spark, tmp_path):
     )
     keys = {r.url_key for r in out.collect()}
     assert keys == {f"com,ex)/{i}" for i in range(1, 1000, 2)}
+
+
+# --- properties of the JVM-hashed filter ------------------------------------
+
+_ODD_M_BITS = (1 << 14) - 8  # byte-aligned, NOT a power of two
+
+
+def _keys_df(spark, keys):
+    return spark.createDataFrame([(k,) for k in keys], "url_key string")
+
+
+def _rows(shards):
+    return sorted((r.shard_id, r.n_keys, bytes(r.bitmap)) for r in shards.collect())
+
+
+def test_bloom_no_false_negatives_non_ascii_odd_m_bits(spark):
+    """Every inserted key probes positive — multi-byte UTF-8 keys, an
+    m_bits that is byte-aligned but not a power of two, and keys that
+    arrive through both the full build and the one-pass top-up."""
+    keys = [f"com,例え)/ü/{i}/😀" for i in range(600)] + [f"org,ex)/{i}" for i in range(600)]
+    built = seenmod.build_bloom_shards(_keys_df(spark, keys[::2]), n_shards=8, m_bits=_ODD_M_BITS)
+    shards = seenmod.add_keys(built, _keys_df(spark, keys[1::2]), m_bits=_ODD_M_BITS, n_shards=8)
+    assert {len(r.bitmap) * 8 for r in shards.collect()} == {_ODD_M_BITS}
+    flagged = seenmod.bloom_maybe_seen(_keys_df(spark, keys), shards, n_shards=8)
+    assert flagged.filter(~F.col("maybe_seen")).count() == 0
+
+
+def test_bloom_fp_rate_matches_theory_at_1e5_keys(spark):
+    """At 10^5 keys sized by ``bits_for`` for 1%, the measured false-positive
+    rate over 10^5 absent keys is within 1.5x of the theoretical
+    (1 - e^(-k n / m))^k for each shard's actual key count — a hash that
+    correlated with the shard routing would push it far above."""
+    import math
+
+    n_shards = 64  # the CrawlConfig default; bits_for then gives a multiple of 64
+    m_bits = seenmod.bits_for(100_000 // n_shards, 0.01)
+    present = spark.range(100_000).select(F.concat(F.lit("com,ex)/p/"), F.col("id").cast("string")).alias("url_key"))
+    absent = spark.range(100_000).select(F.concat(F.lit("net,other)/q/"), F.col("id").cast("string")).alias("url_key"))
+    shards = seenmod.build_bloom_shards(present, n_shards=n_shards, m_bits=m_bits).localCheckpoint(eager=True)
+    k = seenmod.K_HASHES
+    theory = sum((1 - math.exp(-k * r.n_keys / m_bits)) ** k for r in shards.collect()) / n_shards
+    fp = seenmod.bloom_maybe_seen(absent, shards, n_shards=n_shards).filter("maybe_seen").count() / 100_000
+    assert theory / 1.5 <= fp <= theory * 1.5, (fp, theory)
+
+
+def test_add_keys_byte_identical_to_build_then_merge(spark):
+    """The one-pass top-up returns the very rows of build-then-merge_shards,
+    including shards only the new keys touch (the standing set here covers
+    a few of the 16 shards), shards they leave alone, and null keys."""
+    standing = seenmod.build_bloom_shards(
+        _keys_df(spark, [f"com,a)/{i}" for i in range(5)]), n_shards=16, m_bits=_ODD_M_BITS
+    ).localCheckpoint(eager=True)
+    new = _keys_df(spark, [f"com,b)/{i}" for i in range(400)] + [None])
+    one_pass = seenmod.add_keys(standing, new, m_bits=_ODD_M_BITS, n_shards=16)
+    two_pass = seenmod.merge_shards(
+        standing, seenmod.build_bloom_shards(new, n_shards=16, m_bits=_ODD_M_BITS)
+    )
+    assert _rows(one_pass) == _rows(two_pass)
+    assert len(_rows(one_pass)) == 16
