@@ -116,7 +116,6 @@ def timed_run(spark, tmpl_dir: str, corpus_dir: str, use_bloom: bool, prune: boo
         # build amortizes over several probe rounds (the production regime)
         max_per_host_per_round=int(os.environ.get("CBX_QUOTA", "60")),
         checkpoint_dir=run_dir,
-        extra={},
     )
     t0 = time.perf_counter()
     res = run_crawl(spark, corpus, [], cfg)

@@ -12,6 +12,8 @@ frontier DataFrame, each round = ``round_seconds`` of virtual wall time:
   6. fetch     = join vs pages table (sandbox) / HTTP  (S5)
   7. extract   = one-pass Arrow-batched UDF            (E1-E8)
   8. commit    = pages+seen+frontier+metrics snapshot  (K4)
+                 (store write + read-back, or local checkpoints
+                 without a store), then the bloom top-up
 
 ``max_depth=0`` reproduces the reference exactly: the URL set processed is
 the seed list in seed order per host (P8 parity — SURVEY §3.4).  Depth>0
@@ -27,7 +29,8 @@ from __future__ import annotations
 
 import math
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -119,7 +122,6 @@ class CrawlConfig:
     # None = off (byte-identical parity).
     auto_trap_min_fetched: int | None = None
     auto_trap_dup_factor: int = 4
-    extra: dict = field(default_factory=dict)
 
 
 # frontier scores for the discovery chain: robots outranks everything
@@ -634,70 +636,36 @@ def run_crawl(
         # re-checkpointing a cumulative table each round was O(rounds²))
         m = round_metrics(fetched, round_no, deduped_count=0, snapshot_id=None)
 
+        # 8e. commit — one step with or without a store.  A store writes the
+        # four tables concurrently, publishes the manifest after the last
+        # write, and each table is read back (truncates lineage, bounds plan
+        # growth).  Without one, the three small tables are checkpointed
+        # concurrently and pages stays a projection of the checkpointed
+        # `extracted` (the heavy bytes are not materialized twice).
+        tables = {"frontier": next_frontier, "seen": new_seen, "pages": page_rows, "metrics": m}
         if store is not None:
-            timed(
-                "commit",
-                round_no,
-                lambda: store.commit_round(
-                    round_no,
-                    {"frontier": next_frontier, "seen": new_seen, "pages": page_rows, "metrics": m},
-                    # metrics_format versions the per-round-DELTA metrics
-                    # layout (v1 wrote cumulative tables; resume branches on
-                    # this key — see the resume block above)
-                    extra={"virtual_now": now, "metrics_format": "delta"},
-                ),
-            )
-            # re-read from the snapshot: truncates lineage, bounds plan growth
-            next_frontier = store.read(round_no, "frontier")
-            seen_parts.append(store.read(round_no, "seen"))
-            pages_parts.append(store.read(round_no, "pages"))
-            metrics_parts.append(store.read(round_no, "metrics"))
-            if cfg.use_bloom and bloom_shards is not None:
-                # keep the standing bitmaps current — a stale filter would
-                # return false negatives for keys seen THIS round
-                bloom_shards = bloom_add(bloom_shards, seen_parts[-1])
-                if cfg.persist_bloom_every and round_no % cfg.persist_bloom_every == 0:
-                    # aux write AFTER the manifest publish: the merged
-                    # filter covers exactly seen rounds <= round_no (the
-                    # invariant resume relies on); a crash before the aux
-                    # marker lands just costs the next resume a rebuild
-                    timed(
-                        "bloom_persist",
-                        round_no,
-                        lambda: store.write_aux(round_no, "bloom", bloom_shards, meta=bloom_meta),
-                    )
+            # metrics_format versions the per-round-DELTA metrics layout (v1
+            # wrote cumulative tables; the resume block branches on it)
+            meta = {"virtual_now": now, "metrics_format": "delta"}
+            timed("commit", round_no, lambda: store.commit_round(round_no, tables, extra=meta))
+            tables = {name: store.read(round_no, name) for name in tables}
         else:
-            # the three small-state checkpoints (seen delta, frontier,
-            # metrics delta) are independent jobs — run them CONCURRENTLY
-            # (the same helper as the store's commit) so the per-round
-            # constant is one job latency, not three.  page_rows is a
-            # projection of the already-checkpointed `extracted`: no second
-            # write of the heavy bytes.
-            t0 = time.perf_counter()
-            prev_shards = bloom_shards
-
-            def seen_then_bloom():
-                # chain the O(delta) bloom top-up on the CHECKPOINTED seen
-                # delta — reading the raw new_seen would re-run the
-                # dropDuplicates shuffle a second time in parallel
-                ck = timed("ckpt_seen_delta", round_no, lambda: new_seen.localCheckpoint(eager=True))
-                if cfg.use_bloom and prev_shards is not None:
-                    return ck, timed("bloom_merge", round_no, lambda: bloom_add(prev_shards, ck))
-                return ck, None
-
-            done = run_concurrently(spark, {
-                "seen": seen_then_bloom,
-                "frontier": lambda: timed("ckpt_frontier", round_no, lambda: next_frontier.localCheckpoint(eager=True)),
-                "metrics": lambda: timed("ckpt_metrics", round_no, lambda: m.localCheckpoint(eager=True)),
-            })
-            seen_ck, merged_shards = done["seen"]
-            seen_parts.append(seen_ck)
-            if merged_shards is not None:
-                bloom_shards = merged_shards
-            next_frontier = done["frontier"]
-            metrics_parts.append(done["metrics"])
-            timings.append((round_no, "ckpt_small", round(time.perf_counter() - t0, 3)))
-            pages_parts.append(page_rows)
+            ckpts = {name: partial(tables[name].localCheckpoint, eager=True) for name in ("frontier", "seen", "metrics")}
+            tables.update(timed("commit", round_no, lambda: run_concurrently(spark, ckpts)))
+        next_frontier = tables["frontier"]
+        seen_parts.append(tables["seen"])
+        pages_parts.append(tables["pages"])
+        metrics_parts.append(tables["metrics"])
+        if cfg.use_bloom and bloom_shards is not None:
+            # keep the standing bitmaps current — a stale filter would
+            # return false negatives for keys seen THIS round
+            bloom_shards = timed("bloom_merge", round_no, lambda: bloom_add(bloom_shards, tables["seen"]))
+            if store is not None and cfg.persist_bloom_every and round_no % cfg.persist_bloom_every == 0:
+                # aux write AFTER the manifest publish: the merged filter
+                # covers exactly seen rounds <= round_no (the invariant
+                # resume relies on); a crash before the aux marker lands
+                # just costs the next resume a rebuild
+                timed("bloom_persist", round_no, lambda: store.write_aux(round_no, "bloom", bloom_shards, meta=bloom_meta))
 
         if len(seen_parts) >= 16:  # compact: bound union width across rounds
             seen_parts = [seen_view().localCheckpoint(eager=True)]

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from frontier_engine import seen as seenmod
 from frontier_engine import synth
-from frontier_engine.frontier import CrawlConfig, run_crawl
+from frontier_engine.frontier import FRONTIER_COLS, CrawlConfig, run_crawl
 from frontier_engine.storage import SnapshotStore
 
 
@@ -22,6 +22,15 @@ def seeds():
 
 def _key_set(df):
     return {r.url_key for r in df.select("url_key").collect()}
+
+
+def _frontier_tuples(df):
+    return sorted(tuple(r) for r in df.select(*FRONTIER_COLS).collect())
+
+
+def _host_totals(metrics):
+    totals = metrics.groupBy("host").agg(*(F.sum(c).alias(c) for c in ("fetched", "failed", "bytes")))
+    return {r.host: (r.fetched, r.failed, r.bytes) for r in totals.collect()}
 
 
 def test_resume_equals_uninterrupted(spark, corpus, seeds, tmp_path_factory):
@@ -42,6 +51,10 @@ def test_resume_equals_uninterrupted(spark, corpus, seeds, tmp_path_factory):
     b = sorted((r.host, r.host_rank, r.round, r.url) for r in resumed.pages.collect())
     assert [x[3] for x in a] == [x[3] for x in b]  # same url multiset/order keys
     assert full.pages.count() == resumed.pages.count()
+    assert _frontier_tuples(resumed.frontier) == _frontier_tuples(full.frontier)
+    # metrics rows per (partition, host) depend on task placement; the
+    # per-host totals do not
+    assert _host_totals(resumed.metrics) == _host_totals(full.metrics)
 
 
 def test_manifest_lineage(spark, corpus, seeds, tmp_path):
@@ -108,6 +121,7 @@ def test_crashed_round_invisible(spark, corpus, seeds, tmp_path):
 # --- bloom aux format, failed commits, job labels ---------------------------
 
 _BLOOM = dict(round_seconds=9.0, use_bloom=True, bloom_shards=8, bloom_bits_per_shard=1 << 14, n_partitions=8)
+_BLOOM_META = {"n_shards": 8, "m_bits": 1 << 14, "hash": seenmod.HASH_SCHEME}
 
 
 def _page_keys(df):
@@ -205,11 +219,49 @@ def test_resume_after_failed_commit_equals_uninterrupted(spark, corpus, seeds, t
     assert (_key_set(resumed.seen), _page_keys(resumed.pages)) == full_bloom_crawl
 
 
+def test_resume_after_crash_before_aux_marker_equals_uninterrupted(
+    spark, corpus, seeds, tmp_path, monkeypatch, full_bloom_crawl
+):
+    """Crash point: round 1's manifest is published, then the bloom aux
+    write dies after its bitmaps land and before its marker is published.
+    Round 1 stays committed with no usable aux, and a resume (round 0's aux
+    topped up with round 1's seen delta) ends like an uninterrupted crawl."""
+    root = str(tmp_path)
+    write_aux, replace = SnapshotStore.write_aux, os.replace
+
+    def publish_fails(src, dst):
+        if dst.endswith("aux_bloom.json"):
+            raise RuntimeError("injected crash before the aux marker")
+        return replace(src, dst)
+
+    def crashing_write_aux(self, round_no, name, df, meta):
+        if round_no != 1:
+            return write_aux(self, round_no, name, df, meta)
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", publish_fails)
+            return write_aux(self, round_no, name, df, meta)
+
+    monkeypatch.setattr(SnapshotStore, "write_aux", crashing_write_aux)
+    with pytest.raises(RuntimeError, match="injected crash before the aux marker"):
+        run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=100, checkpoint_dir=root))
+    monkeypatch.undo()
+    store = SnapshotStore(spark, root)
+    assert store.latest_round() == 1
+    assert os.path.exists(os.path.join(root, "rounds", "round_00001", "aux_bloom", "_SUCCESS"))
+    assert store.read_aux(1, "bloom", expect_meta=_BLOOM_META) is None
+    assert store.read_aux(0, "bloom", expect_meta=_BLOOM_META) is not None
+
+    resumed = run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=100, checkpoint_dir=root))
+    assert (_key_set(resumed.seen), _page_keys(resumed.pages)) == full_bloom_crawl
+
+
 @pytest.mark.parametrize("with_store", [False, True], ids=["checkpoints", "store"])
 def test_every_crawl_job_carries_the_callers_job_group(spark, corpus, seeds, tmp_path, with_store):
-    """Jobs from the crawl's worker threads (concurrent commit writes, or the
-    storeless concurrent checkpoints and bloom top-up) carry the job group
-    the caller set, like the main thread's jobs."""
+    """Jobs from the crawl's worker threads (the store's concurrent table
+    writes, or the storeless concurrent checkpoints) carry the job group the
+    caller set, like the main thread's jobs.  The same crawl pins the phase
+    names that perfbench reads from ``res.timings``: a rename would make it
+    read 0 silently."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = f"crawl-labels-{with_store}"
@@ -217,10 +269,16 @@ def test_every_crawl_job_carries_the_callers_job_group(spark, corpus, seeds, tmp
     cfg = CrawlConfig(**_BLOOM, max_rounds=1, checkpoint_dir=str(tmp_path) if with_store else None)
     sc.setJobGroup(group, "one-round crawl")
     try:
-        run_crawl(spark, corpus, seeds, cfg)
+        res = run_crawl(spark, corpus, seeds, cfg)
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(prop, None)
     unlabelled = [j for j in tracker.getJobIdsForGroup(None) if j > before]
     labelled = [j for j in tracker.getJobIdsForGroup(group) if j > before]
     assert labelled and not unlabelled, unlabelled
+    phases = {name for _, name, _ in res.timings}
+    if with_store:
+        assert {"pending_check", "extract_ckpt", "commit", "bloom_merge", "bloom_persist"} <= phases
+    else:
+        assert {"commit", "bloom_merge"} <= phases
+        assert not any(p.startswith("ckpt_") for p in phases), phases
