@@ -619,7 +619,7 @@ def q_token_budget(spark, sf):
     return textops.token_budget_sample(_t(spark, sf, "documents", fan=False), budget_permille=400)
 
 
-def q_training_pipeline(spark, sf, materialize=True):
+def q_training_pipeline(spark, sf):
     """The capstone composite: the full training-corpus prep chain as ONE
     query — quality gate → language gate → exact dedup (keep min doc_id
     per content hash) → near-dup drop (any doc that LSH-pairs with a
@@ -635,20 +635,17 @@ def q_training_pipeline(spark, sf, materialize=True):
     # self-referencing dedup join: without the barrier the reps branch and
     # the join-back branch each re-ran the scan + quality projection +
     # md5 — a whole extra corpus parse (guide §1.2 step 1).
-    kept = kept.withColumn("th", F.md5("text"))
-    if materialize:
-        kept = kept.localCheckpoint(eager=True)
+    kept = kept.withColumn("th", F.md5("text")).localCheckpoint(eager=True)
     reps = kept.groupBy("th").agg(F.min("doc_id").alias("keep_id"))
     kept = kept.join(reps, "th").filter(F.col("doc_id") == F.col("keep_id"))
     # kept feeds THREE consumers (the LSH pair generation, the anti-join
     # back, and the PII projection) — without a materialization barrier the
     # scan + quality projection + exact-dedup join re-execute per branch,
     # i.e. two extra full-corpus passes at 100 TB (VERDICT r3 #2; same
-    # rationale as ngram_jaccard_pairs, textops.py).  materialize=False is
-    # the plan-audit path: the checkpoint cuts lineage, so pushdown checks
-    # need the unmaterialized twin (tools/audit_plans.py).
-    if materialize:
-        kept = kept.localCheckpoint(eager=True)
+    # rationale as ngram_jaccard_pairs, textops.py).  The plan audit reads
+    # the scan's pushed filters from the plan taken before each checkpoint
+    # (tools/audit_plans.py).
+    kept = kept.localCheckpoint(eager=True)
     # near-dup drop: a doc that pairs with a SMALLER doc_id is the copy
     pairs = textops.dedup_minhash_lsh(kept.select("doc_id", "text"))
     kept = kept.join(
@@ -675,19 +672,6 @@ def q_training_pipeline(spark, sf, materialize=True):
     )
 
 
-def q_training_pipeline_entry(spark, sf):
-    """Strict (spark, sf) registry wrapper for :func:`q_training_pipeline`.
-
-    The driver's correctness harness requires EXACTLY two positional
-    parameters on registered callables — round 4's ``materialize`` kwarg on
-    the underlying function silently dropped the capstone query from the
-    sweep (VERDICT r4 #1).  The executed path keeps the localCheckpoint
-    barrier (``materialize=True`` default); tools/audit_plans.py calls the
-    3-arg function directly with ``materialize=False`` for pushdown checks.
-    """
-    return q_training_pipeline(spark, sf)
-
-
 def q_contamination(spark, sf):
     """Train/eval contamination detection (benchmark-leakage check): hold
     out 20% of documents (doc_id % 5 == 4) as the eval suite, treat the
@@ -701,17 +685,6 @@ def q_contamination(spark, sf):
     d = _t(spark, sf, "documents")
     return textops.contamination_pairs(
         d.filter(F.col("doc_id") % 5 != 4), d.filter(F.col("doc_id") % 5 == 4)
-    )
-
-
-def q_contamination_unmaterialized(spark, sf):
-    """Plan-audit twin of q_contamination: identical rows, no train-sliver
-    localCheckpoint, so the pushdown audit can see the train scan (the
-    q_training_pipeline(materialize=False) precedent)."""
-    d = _t(spark, sf, "documents")
-    return textops.contamination_pairs(
-        d.filter(F.col("doc_id") % 5 != 4), d.filter(F.col("doc_id") % 5 == 4),
-        materialize=False,
     )
 
 
@@ -1038,7 +1011,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- r5-added queries, crosscheck-green but driver-unverified in
         # r4/r5 because they were registered past the 50-entry cap; front
         # of dict so CORRECTNESS_r6 records them (VERDICT r5 #1) ---
-        "training_pipeline": q_training_pipeline_entry,
+        "training_pipeline": q_training_pipeline,
         "span_dedup": q_span_dedup,
         "decontaminate": q_decontaminate,
         "dup_ngram_coverage": q_dup_ngram_coverage,

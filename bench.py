@@ -215,8 +215,8 @@ def main():
             timings["ann_ivf_build"] = round(time.perf_counter() - t0, 3)
         # best-of-2 for every query line since r6 (was 1): the r4->r5
         # "shuffle queries 15-40% slower" scare was cold-run variance —
-        # BENCH/run_query_variance.py measured rep-0 2-3.5x above the
-        # steady state for the same plan in the same JVM (minhash 2.84 ->
+        # BASELINE.md §"Query-line variance band" records rep-0 2-3.5x above
+        # the steady state for the same plan in the same JVM (minhash 2.84 ->
         # 0.67-0.87 s), a band that brackets both rounds' single-trial
         # numbers.  One retrial removes the codegen draw.
         trials = 3 if name in best_of_3 else 2

@@ -257,7 +257,7 @@ def run_crawl(
 
     empty_seen = spark.createDataFrame([], "url_key string, url string, content_hash string")
     empty_metrics = spark.createDataFrame(
-        [], "round int, partition_id int, host string, fetched long, failed long, deduped long, bytes long, snapshot_id string"
+        [], "round int, partition_id int, host string, fetched long, failed long, bytes long"
     )
     start_round = 0
     seed_ingest_sec = None
@@ -306,18 +306,17 @@ def run_crawl(
         # unioning every round would double-count — keep only the LAST
         # cumulative table, then union the per-round deltas after it (a
         # directory can legitimately mix: v1 rounds, resumed, then v2).
-        cum_last = None
-        delta_rounds: list[int] = []
+        metrics_rounds: list[int] = []
         for r in range(last + 1):
             if not store.has(r, "metrics"):
                 continue
             if store.manifest(r).get("metrics_format") == "delta":
-                delta_rounds.append(r)
+                metrics_rounds.append(r)
             else:
-                cum_last = r
-        metrics_parts = ([store.read(cum_last, "metrics")] if cum_last is not None else []) + [
-            store.read(r, "metrics") for r in delta_rounds if cum_last is None or r > cum_last
-        ]
+                metrics_rounds = [r]  # cumulative: covers every earlier round
+        # projected to the current columns: older stores also carry the
+        # always-constant deduped/snapshot_id columns
+        metrics_parts = [store.read(r, "metrics").select(*empty_metrics.columns) for r in metrics_rounds]
         start_round = last + 1
     else:
         # eager checkpoint: the seed frontier is referenced by several
@@ -634,7 +633,7 @@ def run_crawl(
 
         # 8d. metrics — per-round DELTA like pages/seen (appending to and
         # re-checkpointing a cumulative table each round was O(rounds²))
-        m = round_metrics(fetched, round_no, deduped_count=0, snapshot_id=None)
+        m = round_metrics(fetched, round_no)
 
         # 8e. commit — one step with or without a store.  A store writes the
         # four tables concurrently, publishes the manifest after the last

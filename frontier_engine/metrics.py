@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def round_metrics(fetched: DataFrame, round_no: int, deduped_count: int, snapshot_id: str | None = None) -> DataFrame:
+def round_metrics(fetched: DataFrame, round_no: int) -> DataFrame:
     """Aggregate the round's fetch results by (partition, host)."""
     return (
         fetched.withColumn("partition_id", F.spark_partition_id())
@@ -28,8 +28,6 @@ def round_metrics(fetched: DataFrame, round_no: int, deduped_count: int, snapsho
             "host",
             "fetched",
             "failed",
-            F.lit(deduped_count).cast("long").alias("deduped"),
             F.col("bytes").cast("long"),
-            F.lit(snapshot_id).alias("snapshot_id"),
         )
     )

@@ -1,26 +1,18 @@
-"""Fixed StructTypes for every engine table.
+"""Fixed StructTypes shared across the engine.
 
 The reference accretes dict keys per row (SURVEY §1.1); the engine replaces
 that with explicit, nullable, FIXED schemas so Catalyst can prune columns and
 push predicates.  ``PAGES`` is the north-rule input table shape
-(BASELINE.json ``input_hint``); the rest are the engine's own state tables
-(FIXTURES.md §B4).
+(BASELINE.json ``input_hint``); ``LINK`` and ``IMAGE`` are the element types
+of the extracted ``links`` / ``images`` arrays.  The crawl's state tables
+(frontier, seen, metrics) are built in ``frontier.run_crawl``; FIXTURES.md
+§B4 lists their columns and types (``not_before`` / ``discovered_ts`` are
+virtual seconds, double).
 """
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType, TimestampType
 
 # input_hint: (url:string, warc_ts:timestamp, html:binary, text:string, lang:string)
 PAGES = StructType(
@@ -38,68 +30,4 @@ LINK = StructType(
 )
 IMAGE = StructType(
     [StructField("url", StringType(), True), StructField("alt", StringType(), True)]
-)
-
-# extraction output per page (SURVEY §2.3 mapping table)
-EXTRACTED = StructType(
-    list(PAGES.fields)
-    + [
-        StructField("extracted_text", StringType(), True),  # E1, byte-identical target
-        StructField("links", ArrayType(LINK), True),  # E4
-        StructField("images", ArrayType(IMAGE), True),  # E5
-        StructField("tables", ArrayType(ArrayType(ArrayType(StringType()))), True),  # E6
-        StructField("page_metadata", MapType(StringType(), StringType()), True),  # E7
-        StructField("json_ld", ArrayType(StringType()), True),  # E8 (json strings)
-    ]
-)
-
-FRONTIER = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("url_key", StringType(), False),  # canonical (RFC3986+SURT) key
-        StructField("host", StringType(), False),
-        StructField("depth", IntegerType(), False),
-        StructField("score", DoubleType(), False),  # OPIC/BFS priority
-        StructField("status", StringType(), False),  # pending|fetched|failed|retry
-        StructField("attempt", IntegerType(), False),
-        StructField("not_before", TimestampType(), True),  # retry backoff gate (P4)
-        StructField("seed_index", LongType(), True),  # ordering oracle (P8)
-        StructField("discovered_ts", TimestampType(), True),
-    ]
-)
-
-SEEN = StructType(
-    [
-        StructField("url_key", StringType(), False),
-        StructField("url", StringType(), False),
-        StructField("content_hash", StringType(), True),  # md5[:10] analogue (E17)
-    ]
-)
-
-HOST_POLICY = StructType(
-    [
-        StructField("host", StringType(), False),
-        StructField("crawl_delay", DoubleType(), False),
-        StructField("robots_rules", StringType(), True),  # serialized deny-prefix list
-    ]
-)
-
-METRICS = StructType(
-    [
-        StructField("round", IntegerType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("host", StringType(), True),
-        StructField("fetched", LongType(), False),
-        StructField("failed", LongType(), False),
-        StructField("deduped", LongType(), False),
-        StructField("bytes", LongType(), False),
-        StructField("snapshot_id", StringType(), True),
-    ]
-)
-
-SEEDS = StructType(
-    [
-        StructField("seed_index", LongType(), False),
-        StructField("url", StringType(), False),
-    ]
 )

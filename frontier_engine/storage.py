@@ -39,18 +39,6 @@ from pyspark.sql import functions as F
 
 from frontier_engine.session import run_concurrently
 
-TABLES = ("frontier", "seen", "pages", "metrics")
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog can be used (runtime jar on classpath)."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 class SnapshotStore:
     """Parquet snapshot-directory store with write-then-publish manifests."""
 

@@ -1468,7 +1468,6 @@ def contamination_pairs(
     min_overlap: int = 2,
     max_train_docs_per_shingle: int = 100,
     max_broadcast_shingles: int = 8_000_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Train/eval contamination detection: for each (train doc, eval doc)
     pair, count the DISTINCT word-``shingle_n``-gram hashes they share and
@@ -1548,12 +1547,7 @@ def contamination_pairs(
     # each consumer re-tokenizes and re-shingles the whole train corpus
     # (two full corpus parses for one query — guide §1.2 step 1).  The
     # sliver is eval-matched, i.e. MBs under the eval-is-small contract.
-    # ``materialize=False`` is the plan-audit path (the barrier cuts
-    # lineage and hides the train scan's PushedFilters — the
-    # training_pipeline precedent in tools/audit_plans.py).
-    t = t.join(bcast(esh), "sh")
-    if materialize:
-        t = t.localCheckpoint(eager=True)
+    t = t.join(bcast(esh), "sh").localCheckpoint(eager=True)
     # stop-shingle guard, counted over the matched sliver (df per shingle
     # is identical to the full-corpus count for every surviving shingle)
     hot = (

@@ -76,15 +76,22 @@ def test_resume_v1_cumulative_metrics_not_double_counted(spark, corpus, seeds, t
     """ADVICE r2: a pre-delta-format checkpoint (manifest WITHOUT
     'metrics_format') stored CUMULATIVE metrics — resume must read only the
     last such table, not union every round (which double-counts).  New
-    rounds written after the resume are deltas and do union."""
+    rounds written after the resume are deltas and do union.  The v1 table
+    also carries the old always-constant deduped/snapshot_id columns: the
+    resume projects it to the current columns, so the union still works."""
     root = str(tmp_path)
     # write 2 real rounds, then rewrite their manifests as v1 (key removed)
-    # and their metrics tables as CUMULATIVE (round 1 = rounds 0+1)
+    # and their metrics tables as CUMULATIVE (round 1 = rounds 0+1) in the
+    # old column layout
     run_crawl(spark, corpus, seeds, CrawlConfig(round_seconds=9.0, max_rounds=2, checkpoint_dir=root))
     store = SnapshotStore(spark, root)
     assert store.latest_round() == 1
     m0 = store.read(0, "metrics")
-    cum1 = m0.unionByName(store.read(1, "metrics"))
+    cols = m0.columns
+    cum1 = m0.unionByName(store.read(1, "metrics")).select(
+        "round", "partition_id", "host", "fetched", "failed",
+        F.lit(0).cast("long").alias("deduped"), "bytes", F.lit(None).cast("string").alias("snapshot_id"),
+    )
     total_fetched = sum(r.fetched for r in cum1.collect())
     cum1_path = os.path.join(root, "rounds", "round_00001", "metrics")
     cum1.localCheckpoint(eager=True).write.mode("overwrite").parquet(cum1_path)
@@ -95,13 +102,16 @@ def test_resume_v1_cumulative_metrics_not_double_counted(spark, corpus, seeds, t
             json.dump(mf, fh)
     # resume for 1 more round: metrics_view must be cum@1 + delta@2 only
     res = run_crawl(spark, corpus, seeds, CrawlConfig(round_seconds=9.0, max_rounds=3, checkpoint_dir=root))
+    assert res.metrics.columns == cols
     per_round = {
         r["round"]: r["fetched"]
-        for r in res.metrics.groupBy("round").agg(__import__("pyspark.sql.functions", fromlist=["sum"]).sum("fetched").alias("fetched")).collect()
+        for r in res.metrics.groupBy("round").agg(F.sum("fetched").alias("fetched")).collect()
     }
     # rounds 0+1 appear exactly once (from the cumulative table): their sum
-    # equals what the v1 writer recorded, with no double count
+    # equals what the v1 writer recorded, with no double count; round 2's
+    # delta unions on top
     assert per_round.get(0, 0) + per_round.get(1, 0) == total_fetched
+    assert per_round.get(2, 0) == sum(r.fetched for r in store.read(2, "metrics").collect())
     assert store.manifest(2).get("metrics_format") == "delta"
 
 

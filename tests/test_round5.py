@@ -144,11 +144,6 @@ def test_plan_audit_headline_queries(spark):
 
     qs = dict(entrymod.queries())
     qs["ann_ivf_materialized"] = _ann_ivf_materialized
-    # the shipped training_pipeline and contamination localCheckpoint their
-    # reused stages (lineage cut hides the scan) — pushdown is audited on
-    # the unmaterialized twins, as in PLANS.md
-    qs["training_pipeline"] = lambda s, sf: entrymod.q_training_pipeline(s, sf, materialize=False)
-    qs["contamination"] = lambda s, sf: entrymod.q_contamination_unmaterialized(s, sf)
     failures = []
     for name, expect in _AUDIT_SUBSET.items():
         _, checks = audit_one(spark, name, qs[name], SF_SMALL, expect)

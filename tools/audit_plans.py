@@ -11,13 +11,24 @@ automated checks:
 * codegen   — the executed plan has WholeStageCodegen stages (simple-mode
               ``*(n)`` markers)
 
+A ``localCheckpoint`` cuts lineage, so the final plan of a query that
+checkpoints a reused stage no longer shows the scan beneath it.  The plan
+checks therefore read the final plan together with the plan of every frame
+the query checkpointed while it was built.
+
 Usage: python tools/audit_plans.py [sf_dir]   (rewrites PLANS.md)
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
+import re
 import sys
+from unittest import mock
+
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -103,15 +114,35 @@ def _ann_ivf_materialized(spark, sf):
     return textops.cosine_topk_ivf_materialized(spark, idx, cents, qvecs, k=10)
 
 
-def audit_one(spark, name, fn, sf, expect):
-    import contextlib
-    import io
-
-    df = fn(spark, sf)
+def _formatted(df):
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode="formatted")
-    plan = buf.getvalue()
+    return buf.getvalue()
+
+
+@contextlib.contextmanager
+def _checkpoint_plans():
+    """Record the formatted plan of every frame passed to localCheckpoint
+    inside the block, taken before the real call cuts its lineage.  The
+    classic DataFrame is patched: the ``pyspark.sql.DataFrame`` base class
+    is not the one the call resolves to."""
+    plans = []
+    real = ClassicDataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(_formatted(self))
+        return real(self, *args, **kwargs)
+
+    with mock.patch.object(ClassicDataFrame, "localCheckpoint", recording):
+        yield plans
+
+
+def audit_one(spark, name, fn, sf, expect):
+    with _checkpoint_plans() as ckpt_plans:
+        df = fn(spark, sf)
+    plans = [_formatted(df)] + ckpt_plans
+    plan = "\n".join(plans)
     # codegen stages only exist on the AQE-FINALIZED plan: execute THIS
     # DataFrame's own QueryExecution (a .write would spawn a separate one),
     # then read the final adaptive plan
@@ -129,10 +160,8 @@ def audit_one(spark, name, fn, sf, expect):
     if expect.get("partition_filters"):
         after = plan.split("PartitionFilters: [", 1)
         checks["partition_filters"] = len(after) == 2 and "cluster_id" in after[1][:300]
-    import re
-
     checks["codegen"] = "WholeStageCodegen" in executed or bool(re.search(r"\*\(\d+\)", executed))
-    return plan, checks
+    return plans, checks
 
 
 def main():
@@ -142,12 +171,6 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     qs = dict(entrymod.queries())
     qs["ann_ivf_materialized"] = _ann_ivf_materialized
-    # the shipped queries localCheckpoint their reused stages (three
-    # consumers / the eval-matched train sliver) — that barrier cuts
-    # lineage and hides the parquet scan from the final plan, so the
-    # pushdown audit runs the unmaterialized twins
-    qs["training_pipeline"] = lambda s, sf: entrymod.q_training_pipeline(s, sf, materialize=False)
-    qs["contamination"] = entrymod.q_contamination_unmaterialized
     out = [
         "# PLANS.md — physical-plan audit of headline queries "
         f"({os.path.basename(sf.rstrip('/'))})",
@@ -155,12 +178,15 @@ def main():
         "Regenerated by `python tools/audit_plans.py` — checks per query:",
         "predicate pushdown reaches the parquet scan, broadcast joins where a",
         "side is small, WindowGroupLimit for window top-k, whole-stage codegen",
-        "(simple-mode `*(n)` markers on the executed plan).",
+        "(simple-mode `*(n)` markers on the executed plan).  A query that",
+        "localCheckpoints a reused stage also lists the plan of each",
+        "checkpointed frame (`== localCheckpoint input n ==`); the checks read",
+        "those plans too, since the checkpoint hides the scan beneath it.",
         "",
     ]
     failures = 0
     for name, expect in AUDIT.items():
-        plan, checks = audit_one(spark, name, qs[name], sf, expect)
+        plans, checks = audit_one(spark, name, qs[name], sf, expect)
         bad = [k for k, v in checks.items() if not v]
         failures += len(bad)
         out.append(f"## {name}")
@@ -168,8 +194,10 @@ def main():
         out.append(f"checks: `{checks}`" + (f"  **FAILED: {bad}**" if bad else ""))
         out.append("")
         out.append("```")
-        # keep the plan readable: drop the exchange/statistics noise tail
-        out.append(plan.strip()[:6000])
+        # keep each plan readable: drop the exchange/statistics noise tail
+        out.append(plans[0].strip()[:6000])
+        for i, p in enumerate(plans[1:], 1):
+            out += ["", f"== localCheckpoint input {i} ==", p.strip()[:6000]]
         out.append("```")
         out.append("")
         print(("✗" if bad else "✓"), name, checks)
