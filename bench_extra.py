@@ -6,9 +6,9 @@ Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py \
         [--plans plans/r08 --tag before --trials 2] query [query ...]
 
-Each named query is resolved from ``__spark_entry__.queries()`` (or from
-EXTRA targets below for sub-operators that are not registered queries),
-forced through the noop sink best-of-``--trials``, and its formatted plan
+Each named query is resolved from ``__spark_entry__.queries()`` (an
+unknown name exits non-zero and lists the valid ones), forced through the
+noop sink best-of-``--trials``, and its formatted plan
 is written to ``<plans>/<name>_<tag>.txt`` when --plans is given.  Prints
 one JSON line {"sf": ..., "queries": {name: best_sec}}.
 """
@@ -39,6 +39,10 @@ def main():
     ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
+    qs = entrymod.queries()
+    unknown = [n for n in args.names if n not in qs]
+    if unknown:
+        ap.error(f"unknown query {', '.join(unknown)}; valid names: {', '.join(sorted(qs))}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -49,7 +53,6 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entrymod.queries()
     if not args.no_warmup:
         # same session warm-up as bench.py (JIT, codegen, parquet footers)
         force(qs["dedup_exact"](spark, sf_dir))

@@ -16,7 +16,7 @@ the Heritrix/Common-Crawl SURT convention):
   URLs sort/partition together (locality for per-host politeness grouping)
 
 Pure-Python core (used inside the Arrow-batched UDF) + Spark-native column
-helpers for the cheap pieces (host, naive parity resolution).
+helpers for the cheap pieces (host, URL shape, path template).
 """
 
 from __future__ import annotations
@@ -141,11 +141,6 @@ def surt_key(url: str | None) -> str | None:
 
 
 @pandas_udf(StringType())
-def canonical_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(canonical_url, na_action="ignore")
-
-
-@pandas_udf(StringType())
 def surt_key_udf(urls: pd.Series) -> pd.Series:
     return urls.map(surt_key, na_action="ignore")
 
@@ -158,22 +153,6 @@ def surt_key_udf(urls: pd.Series) -> pd.Series:
 def host_col(url: Column) -> Column:
     """E15 (cli.py:188): netloc — Spark-native ``parse_url``."""
     return F.lower(F.parse_url(url, F.lit("HOST")))
-
-
-def url_key_hash(url_key: Column, bits: int = 64) -> Column:
-    """Stable 64-bit hash of the canonical key — Bloom/partition input."""
-    return F.xxhash64(url_key)
-
-
-def naive_resolve_col(base_url: Column, ref: Column) -> Column:
-    """Parity-mode E4 resolution (parser.py:76-80) as a native expression:
-    absolute http(s) pass-through, '/x' → base+x, else base+'/'+x."""
-    is_abs = ref.startswith("http://") | ref.startswith("https://")
-    return (
-        F.when(base_url.isNull() | is_abs, ref)
-        .when(ref.startswith("/"), F.concat(base_url, ref))
-        .otherwise(F.concat(base_url, F.lit("/"), ref))
-    )
 
 
 def valid_url_col(url: Column) -> Column:

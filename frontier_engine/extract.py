@@ -1,17 +1,13 @@
-"""Arrow-batched extraction UDFs (SURVEY §2.10).
+"""Arrow-batched extraction (SURVEY §2.10).
 
-Two surfaces:
-
-* Individual ``pandas_udf`` wrappers per operator (E1–E8, E19-analogue) —
-  composable, each one parses the HTML again; fine for tests and one-off
-  queries.
-* ``with_extractions`` — the pipeline hot path: a single ``mapInPandas``
-  pass that parses each page ONCE and emits every extraction column from
-  the same DOM.  At 100 TB the parse dominates, so one-pass is the only
-  acceptable plan; Arrow batch size is tuned in session.py.
-
-All semantics delegate to ``refsem`` (reference parity, parser.py citations
-there).  No per-row Python at the Spark API level — everything crosses the
+``with_extractions`` is the pipeline hot path: a single ``mapInPandas``
+pass that parses each page ONCE and runs every wanted ``refsem`` extractor
+(E1, E4–E8) on the same DOM.  At 100 TB the parse dominates, so one-pass is
+the only acceptable plan; Arrow batch size is tuned in session.py.  The
+operators themselves live only in ``refsem`` (reference parity, parser.py
+citations there); this module adds the Spark types and the batching, plus
+``extract_text_udf`` and ``make_selectors_udf`` for the WARC and pipeline
+paths.  No per-row Python at the Spark API level — everything crosses the
 JVM↔Python boundary as Arrow record batches (input_hint requirement).
 """
 
@@ -46,63 +42,10 @@ def _as_str(h) -> str:
     return h or ""
 
 
-# -- individual operator UDFs ------------------------------------------------
-
-
 @pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """E1 (parser.py:41-52) — the byte-identical text column."""
     return html.map(refsem.extract_text, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def extract_text_raw_udf(html: pd.Series) -> pd.Series:
-    """E2 (parser.py:26-27) — get_text() without separator/strip."""
-    return html.map(refsem.extract_text_raw, na_action="ignore")
-
-
-@pandas_udf(ArrayType(LINK))
-def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """E4 (parser.py:54-87) — links with the naive parity resolution."""
-    return pd.Series(
-        [
-            None if h is None else refsem.extract_links(h, b)
-            for h, b in zip(html, base_url)
-        ]
-    )
-
-
-@pandas_udf(ArrayType(IMAGE))
-def extract_images_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """E5 (parser.py:126-157)."""
-    return pd.Series(
-        [
-            None if h is None else refsem.extract_images(h, b)
-            for h, b in zip(html, base_url)
-        ]
-    )
-
-
-@pandas_udf(_TABLES_T)
-def extract_tables_udf(html: pd.Series) -> pd.Series:
-    """E6 (parser.py:89-124)."""
-    return html.map(refsem.extract_tables, na_action="ignore")
-
-
-@pandas_udf(_MAP_T)
-def extract_metadata_udf(html: pd.Series) -> pd.Series:
-    """E7 (parser.py:159-185) — duplicate keys overwrite."""
-    return html.map(refsem.extract_metadata, na_action="ignore")
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_json_ld_udf(html: pd.Series) -> pd.Series:
-    """E8 (parser.py:187-207) — re-serialized to JSON strings so the Spark
-    type stays closed; query with get_json_object/from_json."""
-    return html.map(
-        lambda h: [json.dumps(o, sort_keys=True) for o in refsem.extract_json_ld(h)],
-        na_action="ignore",
-    )
 
 
 def make_selectors_udf(selectors: dict[str, str]):
@@ -121,16 +64,6 @@ def make_selectors_udf(selectors: dict[str, str]):
     return selectors_udf
 
 
-@pandas_udf(_MAP_T)
-def find_media_urls_udf(html: pd.Series) -> pd.Series:
-    """E11 (media_downloader.py:325-340) — raw-regex media discovery;
-    values JSON-encoded lists keyed by media class."""
-    return html.map(
-        lambda h: {k: json.dumps(v) for k, v in refsem.find_media_urls(h).items()},
-        na_action="ignore",
-    )
-
-
 # -- one-pass pipeline extraction ---------------------------------------------
 
 EXTRACT_COLS = StructType(
@@ -144,19 +77,28 @@ EXTRACT_COLS = StructType(
     ]
 )
 
+# each EXTRACT_COLS column as its refsem operator on (parsed page, page url);
+# the reference passes the full page url as base (cli.py:193-195).  JSON-LD
+# is re-serialized to JSON strings so the Spark type stays closed; query it
+# with get_json_object/from_json.
+_OPS = {
+    "extracted_text": lambda doc, url: refsem.extract_text(doc),
+    "links": refsem.extract_links,
+    "images": refsem.extract_images,
+    "tables": lambda doc, url: refsem.extract_tables(doc),
+    "page_metadata": lambda doc, url: refsem.extract_metadata(doc),
+    "json_ld": lambda doc, url: [
+        json.dumps(o, sort_keys=True) for o in refsem.extract_json_ld(doc)
+    ],
+}
+
 
 def with_extractions(
     pages: DataFrame,
-    parity_base: bool = True,
     extract_cols: tuple[str, ...] | None = None,
     keep_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Parse each page once; append all extraction columns.
-
-    ``parity_base``: resolve relative links against the page URL's
-    scheme://host root the way cli.py does (it passes the page url as
-    base_url — parser.py's naive concat then applies).  The reference passes
-    the FULL page url as base (cli.py:193-195 → parser calls), so we do too.
 
     ``extract_cols`` / ``keep_cols`` (guide §4: pass and return only the
     columns the consumer needs): when set, only the named EXTRACT_COLS are
@@ -165,8 +107,9 @@ def with_extractions(
     named input columns are returned through Arrow (a caller that drops
     ``html`` afterwards otherwise pays to serialize every page body
     Python→JVM a second time).  Defaults (None) = all columns, the crawl
-    path's behavior, unchanged.  Each computed column is byte-identical to
-    the full-extraction run — pruning changes cost, never values.
+    path's behavior.  Each computed column is byte-identical to the
+    full-extraction run — pruning changes cost, never values.  A null
+    ``html`` gives null extraction columns.
     """
     wanted = tuple(extract_cols) if extract_cols is not None else tuple(
         f.name for f in EXTRACT_COLS.fields
@@ -178,82 +121,19 @@ def with_extractions(
         + [f for f in EXTRACT_COLS.fields if f.name in wanted]
     )
     out_names = [f.name for f in out_schema.fields]
+    ops = {name: _OPS[name] for name in wanted}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts, links, images, tables, metas, jlds = [], [], [], [], [], []
-            for h, base in zip(pdf["html"], pdf["url"] if parity_base else [None] * len(pdf)):
-                if h is None:
-                    texts.append(None)
-                    links.append(None)
-                    images.append(None)
-                    tables.append(None)
-                    metas.append(None)
-                    jlds.append(None)
-                    continue
-                doc = parse_html(h)
-                if "extracted_text" in wanted:
-                    texts.append(doc.get_text(separator=" ", strip=True))
-                if "links" in wanted:
-                    lnk = []
-                    for a in doc.find_all("a", has_attr="href"):
-                        href = a.attrs["href"]
-                        if href.startswith("javascript:"):
-                            continue
-                        lnk.append(
-                            {"url": refsem._naive_resolve(base, href), "text": a.get_text().strip()}
-                        )
-                    links.append(lnk)
-                if "images" in wanted:
-                    images.append(
-                        [
-                            {"url": refsem._naive_resolve(base, im.attrs["src"]), "alt": im.get("alt", "")}
-                            for im in doc.find_all("img", has_attr="src")
-                        ]
-                    )
-                if "tables" in wanted:
-                    tbls = []
-                    for t in doc.find_all("table"):
-                        rows = []
-                        headers = [th.get_text().strip() for th in t.find_all("th")]
-                        if headers:
-                            rows.append(headers)
-                        for tr in t.find_all("tr"):
-                            cells = [td.get_text().strip() for td in tr.find_all("td")]
-                            if cells:
-                                rows.append(cells)
-                        tbls.append(rows)
-                    tables.append(tbls)
-                if "page_metadata" in wanted:
-                    md: dict[str, str] = {}
-                    title = doc.find("title")
-                    if title:
-                        md["title"] = title.get_text().strip()
-                    for meta in doc.find_all("meta"):
-                        name = meta.get("name", meta.get("property", ""))
-                        content = meta.get("content", "")
-                        if name and content:
-                            md[name] = content
-                    metas.append(md)
-                if "json_ld" in wanted:
-                    jl = []
-                    for script in doc.find_all("script", attrs={"type": "application/ld+json"}):
-                        try:
-                            jl.append(json.dumps(json.loads(script.string or ""), sort_keys=True))
-                        except json.JSONDecodeError:
-                            continue
-                    jlds.append(jl)
+            cols: dict[str, list] = {name: [] for name in ops}
+            # row by row: one DOM alive at a time, never a batch of them
+            for h, url in zip(pdf["html"], pdf["url"]):
+                doc = None if h is None else parse_html(h)
+                for name, op in ops.items():
+                    cols[name].append(None if doc is None else op(doc, url))
             out = pdf[kept_in].copy()
-            computed = {
-                "extracted_text": texts,
-                "links": links,
-                "images": images,
-                "tables": tables,
-                "page_metadata": metas,
-                "json_ld": jlds,
-            }
-            for name in wanted:
-                out[name] = computed[name]
+            for name, values in cols.items():
+                out[name] = values
             # schema order, so correctness never rests on Arrow's by-name
             # column assignment (keep_cols/extract_cols may come in any order)
             yield out[out_names]
@@ -262,11 +142,6 @@ def with_extractions(
 
 
 # -- native-expression operators (no Python worker; SURVEY §2.3) -------------
-
-
-def clean_text_col(col):
-    """E9 (parser.py:209-226) — Catalyst-native; whole-stage codegen."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
 def content_hash_col(col):

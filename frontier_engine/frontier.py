@@ -73,16 +73,6 @@ class CrawlConfig:
     n_partitions: int = 32
     checkpoint_dir: str | None = None
     bloom_bits_per_shard: int = 1 << 20  # 128 KiB/shard ≈ 100k keys at 1% fp
-    # with use_bloom + a snapshot store, persist the merged bitmaps as an
-    # aux table every K committed rounds (0 = never) so RESUME loads the
-    # filter (O(filter bytes) read) instead of rebuilding it from the full
-    # seen store (O(M) scan — 100+ s per 10^8 keys, SCALE.md §384M).  A
-    # resume finding an aux older than the latest round delta-builds only
-    # the missing rounds.  The write costs O(filter bytes) = keys ×
-    # bits_per_key/8 per persist — at 10^10 keys set K so it amortizes
-    # (resume then pays ≤ K-1 small delta builds); at sandbox scale the
-    # bitmaps are MBs and K=1 is free.
-    persist_bloom_every: int = 1
     # mid-crawl sitemap discovery (sitemaps.py): auto-enqueue each seed
     # host's /robots.txt (score ROBOTS_FETCH_SCORE so it wins an early
     # politeness slot), parse fetched robots/sitemap bodies every round,
@@ -659,7 +649,10 @@ def run_crawl(
             # keep the standing bitmaps current — a stale filter would
             # return false negatives for keys seen THIS round
             bloom_shards = timed("bloom_merge", round_no, lambda: bloom_add(bloom_shards, tables["seen"]))
-            if store is not None and cfg.persist_bloom_every and round_no % cfg.persist_bloom_every == 0:
+            if store is not None:
+                # persist the bitmaps every committed round, so a resume
+                # reads the filter instead of rebuilding it from the whole
+                # seen store (SCALE.md §"Bloom persistence across resume").
                 # aux write AFTER the manifest publish: the merged filter
                 # covers exactly seen rounds <= round_no (the invariant
                 # resume relies on); a crash before the aux marker lands

@@ -66,58 +66,8 @@ def op_deduplicate(df: DataFrame, columns: list[str], order_by: list) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# A2 — per-host crawl summary (web_interface.py:393-409 rollup analogue)
-# ---------------------------------------------------------------------------
-
-
-def crawl_summary(extracted: DataFrame) -> DataFrame:
-    """Per-host rollup: pages, links, images, text bytes.  Partial (map-side)
-    aggregation is automatic for these; one shuffle on host."""
-    return (
-        extracted.groupBy(F.lower(F.parse_url("url", F.lit("HOST"))).alias("host"))
-        .agg(
-            F.count(F.lit(1)).alias("pages"),
-            F.sum(F.size(F.coalesce(F.col("links"), F.array()))).alias("links"),
-            F.sum(F.size(F.coalesce(F.col("images"), F.array()))).alias("images"),
-            F.sum(F.length("extracted_text")).alias("text_chars"),
-        )
-    )
-
-
-def top_k_per_group(df: DataFrame, group: str, order: Column, k: int) -> DataFrame:
-    """Window-ranked top-k (frontier per-host quota primitive, A4/north)."""
-    w = Window.partitionBy(group).orderBy(order)
-    return df.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k).drop("__rk")
-
-
-# ---------------------------------------------------------------------------
 # scalar helpers (native rows of SURVEY §2.3)
 # ---------------------------------------------------------------------------
-
-
-def domain_col(url) -> Column:
-    """E15 (cli.py:188)."""
-    return F.parse_url(F.col(url) if isinstance(url, str) else url, F.lit("HOST"))
-
-
-def youtube_video_id_col(url: Column) -> Column:
-    """E13 (youtube_downloader.py:32-56) as a native expression cascade —
-    same substring dispatch order as the reference."""
-    last_seg = F.element_at(F.split(url, "/"), -1)
-    strip_q = lambda c: F.element_at(F.split(c, r"\?"), 1)  # noqa: E731
-    return (
-        F.when(url.contains("youtu.be"), strip_q(last_seg))
-        .when(url.contains("youtube.com/watch"), F.parse_url(url, F.lit("QUERY"), F.lit("v")))
-        .when(
-            url.contains("youtube.com/embed/"),
-            strip_q(F.element_at(F.split(url, "/embed/"), -1)),
-        )
-        .when(
-            url.contains("youtube.com/shorts/"),
-            strip_q(F.element_at(F.split(url, "/shorts/"), -1)),
-        )
-        .otherwise(F.lit(None).cast("string"))
-    )
 
 
 def humanize_size_col(num_bytes: Column) -> Column:
@@ -137,21 +87,6 @@ def humanize_size_col(num_bytes: Column) -> Column:
     )
 
 
-def media_type_col(ext: Column) -> Column:
-    """F6 (media_downloader.py:105-123) — extension → media class."""
-    img = [".jpg", ".jpeg", ".png", ".gif", ".webp", ".svg", ".bmp", ".ico"]
-    vid = [".mp4", ".webm", ".avi", ".mov", ".mkv", ".flv"]
-    aud = [".mp3", ".wav", ".ogg", ".m4a", ".flac"]
-    doc = [".pdf", ".doc", ".docx", ".xls", ".xlsx", ".ppt", ".pptx", ".txt"]
-    return (
-        F.when(ext.isin(img), F.lit("images"))
-        .when(ext.isin(vid), F.lit("videos"))
-        .when(ext.isin(aud), F.lit("audio"))
-        .when(ext.isin(doc), F.lit("documents"))
-        .otherwise(F.lit("other"))
-    )
-
-
 def domain_route_col(url: Column) -> Column:
     """F7 (scraper.py:755, :889; cli.py:138) — domain predicate dispatch as
     a routing column: the reference's ``'youtube.com' in url`` chains become
@@ -162,9 +97,3 @@ def domain_route_col(url: Column) -> Column:
         .when(url.contains("soundcloud.com"), F.lit("soundcloud"))
         .otherwise(F.lit("generic"))
     )
-
-
-def url_extension_col(url: Column) -> Column:
-    """E16 first step — lowercase extension of the URL path."""
-    path = F.parse_url(url, F.lit("PATH"))
-    return F.lower(F.regexp_extract(path, r"(\.[A-Za-z0-9]+)$", 1))

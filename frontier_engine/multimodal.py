@@ -57,10 +57,6 @@ FEATURES_SCHEMA = StructType(
 FEATURE_DIM = 16
 
 
-class CodecUnavailable(NotImplementedError):
-    """Raised when a real codec would be needed but none is installed."""
-
-
 try:  # PIL-gated real codec (VERDICT round 1 #10): dispatches the moment
     # the lib is present; this sandbox ships none, so the stub runs here
     from PIL import Image as _PILImage

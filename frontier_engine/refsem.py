@@ -9,9 +9,10 @@ this sandbox carries neither, so the DOM layer is ``frontier_engine.htmlx``
 which reproduces bs4's ``get_text``/``find_all`` semantics (see its
 docstring for the exact contract).
 
-Everything here is pure Python over one (html, url) pair — the sequential
-oracle for the engine's Arrow-batched UDFs in ``extract.py``.  No Spark
-imports.
+Everything here is pure Python over one (html, url) pair.  The HTML
+extractors also take an already-parsed ``htmlx.Node``, so
+``extract.with_extractions`` parses each page once and runs these same
+functions on the one DOM.  No Spark imports.
 """
 
 from __future__ import annotations
@@ -24,6 +25,12 @@ from urllib.parse import parse_qs, urlparse
 
 from frontier_engine.htmlx import Node, parse_html
 
+
+def _doc(html) -> Node:
+    """``html`` itself if it is already parsed, else its parsed document."""
+    return html if isinstance(html, Node) else parse_html(html)
+
+
 # ---------------------------------------------------------------------------
 # E1 / E2 — text extraction (parser.py:41-52 / parser.py:26-27)
 # ---------------------------------------------------------------------------
@@ -35,7 +42,7 @@ def extract_text(html) -> str:
     THE byte-identical target column (`input_hint`): every whitespace
     decision must match; used by cli.py:194 to populate the page ``text``.
     """
-    return parse_html(html).get_text(separator=" ", strip=True)
+    return _doc(html).get_text(separator=" ", strip=True)
 
 
 def extract_text_raw(html) -> str:
@@ -85,7 +92,7 @@ def _naive_resolve(base_url: str | None, ref: str) -> str:
 def extract_links(html, base_url: str | None = None) -> list[dict]:
     """parser.py:54-87 — every ``<a href>``, skipping ``javascript:`` hrefs
     (parser.py:72-73), naive relative resolution, stripped anchor text."""
-    doc = parse_html(html)
+    doc = _doc(html)
     links = []
     for a in doc.find_all("a", has_attr="href"):
         href = a.attrs["href"]
@@ -97,7 +104,7 @@ def extract_links(html, base_url: str | None = None) -> list[dict]:
 
 def extract_images(html, base_url: str | None = None) -> list[dict]:
     """parser.py:126-157 — every ``<img src>``; ``alt`` defaults to ''."""
-    doc = parse_html(html)
+    doc = _doc(html)
     images = []
     for img in doc.find_all("img", has_attr="src"):
         src = _naive_resolve(base_url, img.attrs["src"])
@@ -114,7 +121,7 @@ def extract_tables(html) -> list[list[list[str]]]:
     """parser.py:89-124 — per ``<table>``: one header row of ALL ``<th>``
     texts (anywhere in the table), then one row per ``<tr>`` of its ``<td>``
     texts; empty cell-lists are dropped."""
-    doc = parse_html(html)
+    doc = _doc(html)
     tables = []
     for table in doc.find_all("table"):
         rows: list[list[str]] = []
@@ -139,7 +146,7 @@ def extract_metadata(html) -> dict[str, str]:
     """parser.py:159-185 — ``<title>`` text + each ``<meta>``'s
     ``name``-else-``property`` → ``content`` (skip empty name or content);
     later duplicates OVERWRITE earlier ones."""
-    doc = parse_html(html)
+    doc = _doc(html)
     metadata: dict[str, str] = {}
     title = doc.find("title")
     if title:
@@ -160,7 +167,7 @@ def extract_metadata(html) -> dict[str, str]:
 def extract_json_ld(html) -> list:
     """parser.py:187-207 — parse each ``script[type=application/ld+json]``;
     malformed JSON blocks are silently dropped (logged in the reference)."""
-    doc = parse_html(html)
+    doc = _doc(html)
     out = []
     for script in doc.find_all("script", attrs={"type": "application/ld+json"}):
         try:
@@ -349,24 +356,6 @@ def humanize_size(num_bytes: float) -> str:
             return f"{size:.1f} {unit}"
         size /= 1024.0
     return f"{size:.1f} TB"
-
-
-# ---------------------------------------------------------------------------
-# E21 — YouTube thumbnail URL family (scraper.py:628-648)
-# ---------------------------------------------------------------------------
-
-_THUMB_KINDS = (
-    ("default", "default"),
-    ("medium", "mqdefault"),
-    ("high", "hqdefault"),
-    ("standard", "sddefault"),
-    ("maxres", "maxresdefault"),
-)
-
-
-def youtube_thumbnails(video_id: str) -> dict[str, str]:
-    """scraper.py:628-648 — the 5 deterministic img.youtube.com URLs."""
-    return {k: f"https://img.youtube.com/vi/{video_id}/{n}.jpg" for k, n in _THUMB_KINDS}
 
 
 # ---------------------------------------------------------------------------

@@ -331,7 +331,10 @@ def write_bucketed_seen(
     transform is the same idea as a table service).  At 10^10 keys the
     exact anti-join's dominant cost is shuffling the store every round;
     bucketing moves that cost to write time, once, amortized over every
-    subsequent round.
+    subsequent round.  ``filter_unseen(candidates, spark.table(table_name))``
+    is then the exact gate with no Exchange on the store side (only the
+    candidate side repartitions to the bucket layout; plan-asserted in
+    tests/test_bucketed_seen.py).
     """
     (
         seen.write.mode("overwrite")
@@ -341,14 +344,3 @@ def write_bucketed_seen(
         .format("parquet")
         .saveAsTable(table_name)
     )
-
-
-def filter_unseen_bucketed(
-    candidates: DataFrame, spark, table_name: str, key_col: str = "url_key"
-) -> DataFrame:
-    """Exact URL-seen gate against a bucketed store table: same rows as
-    ``filter_unseen``, but the store side's Exchange disappears from the
-    plan (only the quota-bounded candidate side repartitions to the bucket
-    layout).  Verified by plan assertion in tests/test_bucketed_seen.py."""
-    seen = spark.table(table_name)
-    return candidates.join(seen.select(key_col), key_col, "left_anti")

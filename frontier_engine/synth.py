@@ -261,20 +261,3 @@ def gen_clustered_embeddings(
                 {"vec_id": c * per_cluster + j, "embedding": [float(x / nv) for x in v]}
             )
     return rows
-
-
-def gen_host_policy(n_hosts: int = 20, seed: int = 44, parity: bool = False):
-    """FIXTURES.md §B3 — per-host crawl delay + deny-prefix robots rules.
-    parity=True reproduces the reference: fixed 3.0s delay, allow-all
-    (the reference never reads robots.txt — SURVEY §2.7 P7)."""
-    rng = random.Random(seed)
-    hosts = [f"site{h}.example.org" for h in range(n_hosts)] + ["hot.example.com"]
-    rows = []
-    for h in hosts:
-        if parity:
-            rows.append({"host": h, "crawl_delay": 3.0, "robots_rules": ""})
-        else:
-            delay = rng.choice((0.5, 1.0, 3.0, 10.0))
-            deny = "/private/\n/admin/" if rng.random() < 0.3 else ""
-            rows.append({"host": h, "crawl_delay": delay, "robots_rules": deny})
-    return rows

@@ -40,22 +40,6 @@ def tokens_col(text, lowercase: bool = True):
     return F.split(c, " ")
 
 
-def shingles_col(text, n: int = 3):
-    """Word n-gram shingles as strings; empty array for short docs.
-
-    transform(sequence(...)) keeps it native; the SQL twin uses
-    list_transform(generate_series(...)).
-    """
-    toks = tokens_col(text)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _h60(col):
     """60-bit integer from md5 — identical in DuckDB (see module doc)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
@@ -2458,7 +2442,7 @@ def dedup_minhash_incremental_bucketed(
     (``write_band_index``): identical survivors, but the index side scans
     pre-bucketed — only the day's delta shuffles.  Plan-asserted single
     Exchange in tests/test_round6b.py (same contract as the bucketed
-    URL-seen gate, seen.py:298)."""
+    URL-seen gate, ``seen.write_bucketed_seen``)."""
     newb = lsh_band_keys(new_docs, n_hashes, band_size, shingle_n).select(
         "doc_id", F.concat_ws("#", "band_id", "band_hash").alias("band_key")
     )

@@ -29,7 +29,7 @@ def test_bucketed_antijoin_rows_and_plan(spark, tmp_path):
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            out = seenmod.filter_unseen_bucketed(cand, spark, "seen_bucketed_test")
+            out = seenmod.filter_unseen(cand, spark.table("seen_bucketed_test"))
             got = {r["url_key"] for r in out.collect()}
             want = {r["url_key"] for r in cand.join(seen_rows, "url_key", "left_anti").collect()}
             assert got == want == set()  # all candidates are already seen
@@ -47,7 +47,7 @@ def test_bucketed_antijoin_rows_and_plan(spark, tmp_path):
                 F.concat(F.lit("k"), F.col("id").cast("string")).alias("url_key"),
                 F.lit("u").alias("url"),
             )
-            out2 = seenmod.filter_unseen_bucketed(cand2, spark, "seen_bucketed_test")
+            out2 = seenmod.filter_unseen(cand2, spark.table("seen_bucketed_test"))
             assert out2.count() == 1_000  # 50_000..50_999 are new
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

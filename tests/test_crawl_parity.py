@@ -8,8 +8,12 @@ against the engine's distributed round loop:
   * identical final URL-seen set (set equality)
   * identical per-host fetch ORDER (list equality)
   * byte-identical extracted text per url
+
+and the one-parse extraction pass against the refsem operators, column by
+column.
 """
 
+import json
 from collections import defaultdict
 
 import pytest
@@ -20,6 +24,25 @@ from frontier_engine.frontier import CrawlConfig, run_crawl
 
 N_PAGES = 300
 N_SEEDS = 80
+
+# (url, html) pages that hit the operators' quirks: null and empty html,
+# javascript:/rooted/relative/absolute hrefs, malformed JSON-LD, a table
+# with <th> and empty <td> cells, duplicate meta names, images without alt
+FRAGMENTS = [
+    ("https://a.example/null", None),
+    ("https://a.example/empty", b""),
+    ("https://b.example/links", b'<a href="javascript:void(0)">js</a><a href="/rooted">r</a>'
+     b'<a href="rel/page">rel</a><a href="https://c.example/x"> abs </a><a>no href</a>'),
+    ("https://b.example/jsonld", b'<script type="application/ld+json">{"b": 1, "a": [2, {"z": 0, "y": 1}]}'
+     b'</script><script type="application/ld+json">{not json</script>'
+     b'<script type="application/ld+json">[1, 2]</script>'),
+    ("https://c.example/table", b"<table><tr><th>H1</th><th> H2 </th></tr><tr><td></td><td>x</td></tr>"
+     b"<tr></tr><tr><td> y </td></tr></table><table></table>"),
+    ("https://c.example/meta", b'<title> T </title><meta name="d" content="1"><meta name="d" content="2">'
+     b'<meta property="og:x" content="p"><meta name="e" content=""><meta content="no name">'),
+    ("https://d.example/img", b'<img src="/a.png" alt="A"><img src="b.png"><img alt="no src">'
+     b'<img src="http://e.example/c.jpg" alt="">'),
+]
 
 
 @pytest.fixture(scope="module")
@@ -143,3 +166,28 @@ def test_with_extractions_pruned_columns_in_schema_order(spark, corpus):
     assert pruned.columns == ["url", "html", "extracted_text", "links"]
     full = with_extractions(pages).select(*pruned.columns)
     assert sorted(pruned.collect()) == sorted(full.collect())
+
+
+def test_with_extractions_equals_refsem_per_column(spark, corpus):
+    """Each EXTRACT_COLS column of the one-parse pass equals its refsem
+    operator on the same (html, page url); json_ld as sorted-key dumps; a
+    null html gives nulls."""
+    from frontier_engine.extract import EXTRACT_COLS, with_extractions
+    from frontier_engine.schema import PAGES
+
+    frags = spark.createDataFrame([(u, None, h, None, None) for u, h in FRAGMENTS], schema=PAGES)
+    rows = with_extractions(corpus.unionByName(frags)).collect()
+    want = {
+        "extracted_text": lambda h, u: refsem.extract_text(h),
+        "links": refsem.extract_links,
+        "images": refsem.extract_images,
+        "tables": lambda h, u: refsem.extract_tables(h),
+        "page_metadata": lambda h, u: refsem.extract_metadata(h),
+        "json_ld": lambda h, u: [json.dumps(o, sort_keys=True) for o in refsem.extract_json_ld(h)],
+    }
+    assert sorted(want) == sorted(EXTRACT_COLS.fieldNames())
+    assert len(rows) == N_PAGES + len(FRAGMENTS)
+    for r in rows:
+        got = r.asDict(recursive=True)
+        for col, op in want.items():
+            assert got[col] == (None if r.html is None else op(r.html, r.url)), (r.url, col)

@@ -164,6 +164,16 @@ def audit_one(spark, name, fn, sf, expect):
     return plans, checks
 
 
+# per-run counters in a formatted plan: Catalyst expression ids (``#1234``),
+# AQE exchange ids and RDD ids.  PLANS.md prints them as ``N`` so an
+# unchanged tree regenerates an unchanged file; the checks read raw plans.
+_RUN_COUNTERS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
+def _stable(plan: str) -> str:
+    return _RUN_COUNTERS.sub(r"\1N", plan)
+
+
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("local[8]", app_name="plan-audit",
@@ -195,9 +205,9 @@ def main():
         out.append("")
         out.append("```")
         # keep each plan readable: drop the exchange/statistics noise tail
-        out.append(plans[0].strip()[:6000])
+        out.append(_stable(plans[0].strip())[:6000])
         for i, p in enumerate(plans[1:], 1):
-            out += ["", f"== localCheckpoint input {i} ==", p.strip()[:6000]]
+            out += ["", f"== localCheckpoint input {i} ==", _stable(p.strip())[:6000]]
         out.append("```")
         out.append("")
         print(("✗" if bad else "✓"), name, checks)
