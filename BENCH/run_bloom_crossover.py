@@ -116,7 +116,7 @@ def main():
         def run_bloom() -> float:
             t = time.perf_counter()
             n = seenmod.filter_unseen(
-                cand, seen, use_bloom=True, shards=shards, n_shards=n_shards,
+                cand, seen, shards=shards, n_shards=n_shards,
                 prune_shard_col="shard_id",
             ).count()
             assert n == n_cand - n_dup, n

@@ -86,7 +86,7 @@ def build_fixture(spark, n_seen: int, n_cand: int) -> tuple[str, str]:
     return tmpl_dir, corpus_dir
 
 
-def timed_run(spark, tmpl_dir: str, corpus_dir: str, use_bloom: bool, prune: bool) -> dict:
+def timed_run(spark, tmpl_dir: str, corpus_dir: str, use_bloom: bool) -> dict:
     import shutil
 
     # fresh resume dir per run so rounds written by one mode never leak
@@ -108,7 +108,6 @@ def timed_run(spark, tmpl_dir: str, corpus_dir: str, use_bloom: bool, prune: boo
         max_rounds=6,
         max_depth=0,
         use_bloom=use_bloom,
-        prune_seen_shards=prune,
         bloom_shards=N_SHARDS,
         bloom_bits_per_shard=BITS_PER_SHARD,
         n_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "16")),
@@ -122,7 +121,7 @@ def timed_run(spark, tmpl_dir: str, corpus_dir: str, use_bloom: bool, prune: boo
     dt = time.perf_counter() - t0
     n_seen = res.seen.count()
     out = {
-        "mode": ("bloom+prune" if prune else "bloom") if use_bloom else "exact",
+        "mode": "bloom+prune" if use_bloom else "exact",
         "sec": round(dt, 2),
         "rounds": res.rounds,
         "urls_seen_final": n_seen,
@@ -142,9 +141,9 @@ def main():
     for n_seen in sizes:
         tmpl, corpus = build_fixture(spark, n_seen, n_cand)
         # warm-up once per fixture (JIT, footers) with the cheap exact mode
-        timed_run(spark, tmpl, corpus, use_bloom=False, prune=False)
-        for use_bloom, prune in ((False, False), (True, True)):
-            r = timed_run(spark, tmpl, corpus, use_bloom, prune)
+        timed_run(spark, tmpl, corpus, use_bloom=False)
+        for use_bloom in (False, True):
+            r = timed_run(spark, tmpl, corpus, use_bloom)
             r.update({"seen_keys": n_seen, "candidates": n_cand})
             results.append(r)
             print(json.dumps(r), flush=True)

@@ -56,18 +56,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str, fan: bool = True) -> DataFra
         # (100 TB inputs split past any core count on their own), and the
         # shuffle it adds moves table MBs to unlock compute seconds.
         # Results are row-identical: every downstream op is keyed or
-        # row-local, never partition-order-dependent.
-        try:
-            if os.path.isdir(path):
-                nbytes = sum(
-                    os.path.getsize(os.path.join(path, f))
-                    for f in os.listdir(path)
-                    if not f.startswith(("_", "."))
-                )
-            else:
-                nbytes = os.path.getsize(path)
-        except OSError:
-            nbytes = 0
+        # row-local, never partition-order-dependent.  Input bytes come
+        # from the Hadoop FileSystem, so s3:// and hdfs:// inputs size the
+        # fan-out like local ones.
+        jvm = spark.sparkContext._jvm
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        nbytes = fs.getContentSummary(hpath).getLength()
         cores = spark.sparkContext.defaultParallelism
         target = min(cores, max(2, int(nbytes // _FANOUT_SPLIT_BYTES)))
         if df.rdd.getNumPartitions() < target:

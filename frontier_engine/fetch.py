@@ -39,9 +39,7 @@ FETCH_COLS = [
 ]
 
 
-def fetch_via_pages_table(
-    candidates: DataFrame, pages: DataFrame, broadcast_candidates: bool = True
-) -> DataFrame:
+def fetch_via_pages_table(candidates: DataFrame, pages: DataFrame) -> DataFrame:
     """Simulated fetch: left join on url against the pages corpus.
 
     Join strategy (the 100 TB plan): the per-round candidate set is bounded
@@ -50,14 +48,11 @@ def fetch_via_pages_table(
     semi-joined with a plain scan — the corpus is never shuffled (shuffling
     100 TB of html per round would dominate everything).  Only the matching
     captures (≈ candidate count) reach the earliest-capture dedup window and
-    the final left join.  Set ``broadcast_candidates=False`` to fall back to
-    a shuffled join (candidate sets beyond driver broadcast limits).
+    the final left join.
     """
     from pyspark.sql import Window
 
-    cand_urls = candidates.select("url").distinct()
-    if broadcast_candidates:
-        cand_urls = F.broadcast(cand_urls)
+    cand_urls = F.broadcast(candidates.select("url").distinct())
     matches = pages.select("url", "html", "warc_ts").join(cand_urls, "url")
     # the corpus may hold several captures of one url (re-crawls); serve the
     # earliest capture deterministically so the join never fans out — the

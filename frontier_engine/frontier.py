@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType
 
 from frontier_engine import seen as seenmod
-from frontier_engine.canonicalize import host_col, surt_key_udf, valid_url_col
+from frontier_engine.canonicalize import host_col, path_template_col, surt_key_udf, valid_url_col
 from frontier_engine.extract import content_hash_col, with_extractions
 from frontier_engine.fetch import fetch_via_pages_table
 from frontier_engine.metrics import round_metrics
@@ -56,17 +56,8 @@ class CrawlConfig:
     max_depth: int = 0  # 0 = reference parity (no enqueue of discovered links)
     round_seconds: float = 60.0
     max_rounds: int = 1000
-    max_attempts: int = 3  # tenacity stop_after_attempt(3), scraper.py:137
-    retry_backoff: float = 8.0  # seconds of virtual time before retry
     use_bloom: bool = False
     bloom_shards: int = 64
-    # with use_bloom, restrict the confirm anti-join to bloom-positive
-    # shards (seen.py filter_unseen prune_shard_col).  In-memory the shard
-    # id is recomputed map-side on the seen view (no schema change, resume
-    # untouched); over a shard-PARTITIONED parquet store the same path
-    # prunes whole files.  The 10^10-regime knob: confirm cost follows the
-    # positive count, not the seen-set size (SCALE.md §bloom-crossover).
-    prune_seen_shards: bool = True
     max_per_host_per_round: int | None = None
     honor_robots: bool = False  # reference never does (P7); engine can
     salt_buckets: int = 8
@@ -113,6 +104,9 @@ class CrawlConfig:
     auto_trap_min_fetched: int | None = None
     auto_trap_dup_factor: int = 4
 
+
+MAX_ATTEMPTS = 3  # tenacity stop_after_attempt(3), scraper.py:137
+RETRY_BACKOFF = 8.0  # virtual seconds before the first retry, doubling per attempt
 
 # frontier scores for the discovery chain: robots outranks everything
 # (cheapest page on the host, unlocks the rest), sitemap files outrank
@@ -243,6 +237,12 @@ def run_crawl(
     ``None`` (default) the plan is untouched — byte-identical parity."""
     cfg = config or CrawlConfig()
     fetch = fetcher or fetch_via_pages_table
+    if trap_templates is not None:
+        # normalized once: the gate and the auto-trap union both read the
+        # flagged (host, template) pairs
+        if "is_trap" in trap_templates.columns:
+            trap_templates = trap_templates.filter(F.col("is_trap").cast("boolean"))
+        trap_templates = trap_templates.select("host", "template")
     store = resume_store or (SnapshotStore(spark, cfg.checkpoint_dir) if cfg.checkpoint_dir else None)
 
     empty_seen = spark.createDataFrame([], "url_key string, url string, content_hash string")
@@ -255,42 +255,19 @@ def run_crawl(
     # Iceberg appends); the full seen view is the union of disjoint deltas,
     # compacted every COMPACT_EVERY rounds to bound plan width
     pages_parts: list[DataFrame] = []
-    seen_parts: list[DataFrame] = []
+    seen_rounds: list[tuple[int, DataFrame]] = []
     metrics_parts: list[DataFrame] = []
-    # resume-time bloom state: (bitmap frame or None, highest seen-round it
-    # covers) — filled from the aux artifact when one is valid for cfg
-    resumed_bloom: DataFrame | None = None
-    resumed_bloom_round = -1
     # the aux marker names the hash scheme too: bitmaps hashed another way
     # (an older store) are rebuilt, never probed
     bloom_meta = {"n_shards": cfg.bloom_shards, "m_bits": cfg.bloom_bits_per_shard, "hash": seenmod.HASH_SCHEME}
 
     def bloom_add(shards: DataFrame, new: DataFrame) -> DataFrame:
-        return seenmod.add_keys(
-            shards, new, m_bits=cfg.bloom_bits_per_shard, n_shards=cfg.bloom_shards
-        ).localCheckpoint(eager=True)
+        return seenmod.add_keys(shards, new, m_bits=cfg.bloom_bits_per_shard, n_shards=cfg.bloom_shards)
 
     if store is not None and (last := store.latest_round()) is not None:
         frontier = store.read(last, "frontier")
         pages_parts = [store.read(r, "pages") for r in range(last + 1) if store.has(r, "pages")]
         seen_rounds = [(r, store.read(r, "seen")) for r in range(last + 1) if store.has(r, "seen")]
-        seen_parts = [df for _, df in seen_rounds]
-        if cfg.use_bloom:
-            # newest persisted filter whose config matches; an older one is
-            # still usable — the gap rounds delta-merge on top (O(delta)),
-            # never a full O(M) rebuild
-            for r in range(last, -1, -1):
-                aux = store.read_aux(r, "bloom", expect_meta=bloom_meta)
-                if aux is not None:
-                    resumed_bloom, resumed_bloom_round = aux, r
-                    break
-            if resumed_bloom is not None:
-                # the rounds after the aux top it up in one pass
-                gap = [df for r, df in seen_rounds if r > resumed_bloom_round]
-                if gap:
-                    resumed_bloom = bloom_add(resumed_bloom, _union_all(gap))
-                else:
-                    resumed_bloom = resumed_bloom.localCheckpoint(eager=True)
         # metrics format is versioned in the manifest (ADVICE r2): v1
         # snapshots (no 'metrics_format' key) stored CUMULATIVE metrics, so
         # unioning every round would double-count — keep only the LAST
@@ -323,6 +300,30 @@ def run_crawl(
             frontier = frontier.unionByName(_robots_seed_rows(frontier))
         frontier = frontier.localCheckpoint(eager=True)
         seed_ingest_sec = round(time.perf_counter() - t0, 3)
+    seen_parts = [df for _, df in seen_rounds]
+
+    # the seen gate's bloom filter (step 2): set up once here, topped up
+    # after every committed round (O(delta) per round, the 10^10-regime
+    # requirement).  The newest persisted filter whose marker matches is
+    # read (O(filter bytes)) and the seen rounds after it are OR-ed in;
+    # with none, the filter is built from the seen view (O(M) scan).  An
+    # aux with no gap skips the cogroup, which would shuffle every bitmap.
+    # start_round > 0 only on a resume from a store.
+    bloom_shards: DataFrame | None = None
+    if cfg.use_bloom:
+        aux, aux_round = None, -1
+        for r in range(start_round - 1, -1, -1):
+            if (aux := store.read_aux(r, "bloom", expect_meta=bloom_meta)) is not None:
+                aux_round = r
+                break
+        gap = [df for r, df in seen_rounds if r > aux_round]
+        if aux is None:
+            bloom_shards = seenmod.build_bloom_shards(
+                _union_all(gap or [empty_seen]), n_shards=cfg.bloom_shards, m_bits=cfg.bloom_bits_per_shard
+            )
+        else:
+            bloom_shards = bloom_add(aux, _union_all(gap)) if gap else aux
+        bloom_shards = bloom_shards.localCheckpoint(eager=True)
 
     def seen_view() -> DataFrame:
         return _union_all(seen_parts) if seen_parts else empty_seen
@@ -341,11 +342,6 @@ def run_crawl(
         out = fn()
         timings.append((rnd, phase, round(time.perf_counter() - t0, 3)))
         return out
-
-    # bloom shards maintained INCREMENTALLY: full build once (resume or
-    # first use), then per-round OR-merge of the new_seen delta — O(delta)
-    # per round instead of O(total seen), the 10^10-regime requirement
-    bloom_shards: DataFrame | None = None
 
     # working host policy: starts at the caller's table, grows mid-crawl
     # when learn_robots_policy folds in fetched robots.txt (fresher wins)
@@ -389,29 +385,19 @@ def run_crawl(
             continue
         rounds_run += 1
 
-        # 2. URL-seen gate — exact anti-join, optional bloom pre-filter.
-        # First use prefers the persisted aux filter (read = O(filter
-        # bytes), already delta-topped-up in the resume block); a full
-        # build from the seen store is the fallback (O(M) scan).
-        if cfg.use_bloom and bloom_shards is None:
-            if resumed_bloom is not None:
-                bloom_shards = resumed_bloom
-                resumed_bloom = None
-            else:
-                bloom_shards = seenmod.build_bloom_shards(
-                    seen_df, n_shards=cfg.bloom_shards, m_bits=cfg.bloom_bits_per_shard
-                ).localCheckpoint(eager=True)
-        seen_gate, prune_col = seen_df, None
-        if cfg.use_bloom and cfg.prune_seen_shards:
-            # shard ids recomputed map-side each round (cheap xxhash64 over
-            # rows already scanned); contract holds by construction, so the
-            # store-sample validation job is skipped
-            seen_gate = seenmod.with_shard_id(seen_df, "url_key", cfg.bloom_shards)
-            prune_col = "shard_id"
-        unseen = seenmod.filter_unseen(
-            pending, seen_gate, use_bloom=cfg.use_bloom, shards=bloom_shards,
-            n_shards=cfg.bloom_shards, prune_shard_col=prune_col, validate_shards=False,
-        )
+        # 2. URL-seen gate — exact anti-join, or the bloom pre-filter with
+        # the confirm join restricted to bloom-positive shards: its cost
+        # follows the positive count, not the seen-set size (SCALE.md
+        # §bloom-crossover).  Shard ids are recomputed map-side (cheap
+        # xxhash64 over rows already scanned); the contract holds by
+        # construction, so the store-sample validation job is skipped
+        if cfg.use_bloom:
+            unseen = seenmod.filter_unseen(
+                pending, seenmod.with_shard_id(seen_df, "url_key", cfg.bloom_shards), shards=bloom_shards,
+                n_shards=cfg.bloom_shards, prune_shard_col="shard_id", validate_shards=False,
+            )
+        else:
+            unseen = seenmod.filter_unseen(pending, seen_df)
 
         # 3-4. politeness: policy join, robots, per-host rank+quota.
         # The robots verdict is a FLAG COLUMN on one persisted frame, not a
@@ -432,16 +418,11 @@ def run_crawl(
             # side (canonicalize.path_template_col) so gate and stats can
             # never drift.  dropDuplicates defends the left-join row count
             # against a caller passing duplicate flagged pairs.
-            tt = traps
-            if "is_trap" in tt.columns:
-                tt = tt.filter(F.col("is_trap").cast("boolean"))
             tt = (
-                tt.select("host", F.col("template").alias("__tmpl"))
+                traps.select("host", F.col("template").alias("__tmpl"))
                 .dropDuplicates(["host", "__tmpl"])
                 .withColumn("__trap_hit", F.lit(True))
             )
-            from frontier_engine.canonicalize import path_template_col
-
             cand = (
                 cand.withColumn("__tmpl", path_template_col(F.parse_url(F.col("url"), F.lit("PATH"))))
                 .join(F.broadcast(tt), ["host", "__tmpl"], "left")
@@ -491,7 +472,7 @@ def run_crawl(
         # new_seen keys are disjoint from prior deltas by construction (they
         # survived filter_unseen), so appending keeps the view duplicate-free
         failed = fetched.filter(F.col("fetch_status") == "failed")
-        exhausted = failed.filter(F.col("attempt") + 1 >= cfg.max_attempts)
+        exhausted = failed.filter(F.col("attempt") + 1 >= MAX_ATTEMPTS)
         new_seen = (
             extracted.select("url_key", "url", "content_hash")
             .unionByName(exhausted.select("url_key", "url", F.lit(None).cast(StringType()).alias("content_hash")))
@@ -500,14 +481,13 @@ def run_crawl(
         seen_df = seen_df.unionByName(new_seen)
 
         # 8b. frontier update: mark fetched, schedule retries, enqueue links
-        fetched_keys = extracted.select("url_key")
         retry_rows = (
-            failed.filter(F.col("attempt") + 1 < cfg.max_attempts)
+            failed.filter(F.col("attempt") + 1 < MAX_ATTEMPTS)
             .select(
                 "url", "url_key", "host", "depth", "score",
                 F.lit("retry").alias("status"),
                 (F.col("attempt") + 1).alias("attempt"),
-                (F.lit(now) + F.lit(cfg.retry_backoff) * F.pow(F.lit(2.0), F.col("attempt"))).alias("not_before"),
+                (F.lit(now) + F.lit(RETRY_BACKOFF) * F.pow(F.lit(2.0), F.col("attempt"))).alias("not_before"),
                 "seed_index",
                 F.col("discovered_ts"),
             )
@@ -522,13 +502,7 @@ def run_crawl(
         next_frontier = leftover.select(*FRONTIER_COLS).unionByName(not_selected).unionByName(retry_rows.select(*FRONTIER_COLS))
 
         if cfg.max_depth > 0:
-            discovered = _expand_links(extracted, cfg, now)
-            # no distinct() on the exclusion side: an anti-join's semantics
-            # are unchanged by duplicate build-side keys, and the distinct
-            # was a whole extra shuffle stage per round
-            known = seen_df.select("url_key").unionByName(next_frontier.select("url_key")).unionByName(fetched_keys)
-            fresh = discovered.join(known, "url_key", "left_anti")
-            next_frontier = next_frontier.unionByName(fresh.select(*FRONTIER_COLS))
+            next_frontier = _enqueue(next_frontier, _expand_links(extracted, cfg, now), seen_df)
 
         n_dim = 0
         if cfg.discover_sitemaps or cfg.learn_robots_policy:
@@ -543,10 +517,7 @@ def run_crawl(
             n_dim = dim_pages.count()
 
         if cfg.discover_sitemaps and n_dim > 0:
-            disc = _discovered_sitemap_rows(dim_pages, now)
-            known = seen_df.select("url_key").unionByName(next_frontier.select("url_key")).unionByName(fetched_keys)
-            fresh = disc.join(known, "url_key", "left_anti")
-            next_frontier = next_frontier.unionByName(fresh.select(*FRONTIER_COLS))
+            next_frontier = _enqueue(next_frontier, _discovered_sitemap_rows(dim_pages, now), seen_df)
 
         if cfg.learn_robots_policy and n_dim > 0:
             # per-host dim rows (a robots.txt body per host, once — the
@@ -575,8 +546,6 @@ def run_crawl(
         )
 
         if cfg.auto_trap_min_fetched is not None:
-            from frontier_engine.canonicalize import path_template_col
-
             delta = page_rows.select(
                 "host",
                 path_template_col(F.parse_url(F.col("url"), F.lit("PATH"))).alias("template"),
@@ -610,16 +579,7 @@ def run_crawl(
                 )
                 .select("host", "template")
             )
-            base = trap_templates
-            if base is not None and "is_trap" in base.columns:
-                # keep the caller's is_trap filter semantics through the
-                # union (the gate's own filter would no longer see the col)
-                base = base.filter(F.col("is_trap").cast("boolean"))
-            traps = (
-                detected
-                if base is None
-                else base.select("host", "template").unionByName(detected)
-            )
+            traps = detected if trap_templates is None else trap_templates.unionByName(detected)
 
         # 8d. metrics — per-round DELTA like pages/seen (appending to and
         # re-checkpointing a cumulative table each round was O(rounds²))
@@ -645,10 +605,12 @@ def run_crawl(
         seen_parts.append(tables["seen"])
         pages_parts.append(tables["pages"])
         metrics_parts.append(tables["metrics"])
-        if cfg.use_bloom and bloom_shards is not None:
+        if cfg.use_bloom:
             # keep the standing bitmaps current — a stale filter would
             # return false negatives for keys seen THIS round
-            bloom_shards = timed("bloom_merge", round_no, lambda: bloom_add(bloom_shards, tables["seen"]))
+            bloom_shards = timed(
+                "bloom_merge", round_no, lambda: bloom_add(bloom_shards, tables["seen"]).localCheckpoint(eager=True)
+            )
             if store is not None:
                 # persist the bitmaps every committed round, so a resume
                 # reads the filter instead of rebuilding it from the whole
@@ -691,6 +653,15 @@ def _union_all(parts: list[DataFrame]) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _enqueue(frontier: DataFrame, found: DataFrame, seen: DataFrame) -> DataFrame:
+    """``frontier`` plus the ``found`` rows whose key is neither seen nor
+    already queued.  No distinct() on the exclusion side: an anti-join's
+    semantics are unchanged by duplicate build-side keys, and the distinct
+    was a whole extra shuffle stage per round."""
+    known = seen.select("url_key").unionByName(frontier.select("url_key"))
+    return frontier.unionByName(found.join(known, "url_key", "left_anti").select(*FRONTIER_COLS))
 
 
 def _expand_links(extracted: DataFrame, cfg: CrawlConfig, now: float) -> DataFrame:

@@ -27,8 +27,9 @@ Design for 10^10 keys:
   scheme; persisted bitmaps carry it in their marker, so a bitmap hashed
   another way is rebuilt, never probed.
 
-At small scale the exact anti-join alone wins; ``use_bloom`` is a knob, and
-correctness tests run both paths and assert identical results.
+At small scale the exact anti-join alone wins: ``filter_unseen`` takes the
+bloom path only when it is given shards, and correctness tests run both
+paths and assert identical results.
 """
 
 from __future__ import annotations
@@ -257,7 +258,6 @@ def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
     key_col: str = "url_key",
-    use_bloom: bool = False,
     shards: DataFrame | None = None,
     n_shards: int = 64,
     prune_shard_col: str | None = None,
@@ -265,8 +265,9 @@ def filter_unseen(
 ) -> DataFrame:
     """Rows of ``candidates`` whose key is NOT in ``seen`` — exact.
 
-    With ``use_bloom``, bloom-negative rows bypass the shuffle-heavy exact
-    anti-join; only bloom-positive rows (true hits + ~fp_rate noise) pay it.
+    Given bloom ``shards``, bloom-negative rows bypass the shuffle-heavy
+    exact anti-join; only bloom-positive rows (true hits + ~fp_rate noise)
+    pay it.
     Either path returns the same rows (tested under injected-FP filters).
 
     ``prune_shard_col``: name of a PHYSICAL shard column on ``seen`` whose
@@ -289,7 +290,7 @@ def filter_unseen(
     checked against the recomputed shard id and a mismatch raises.  Hot
     loops that validated the store once at load time pass False.
     """
-    if not use_bloom or shards is None:
+    if shards is None:
         # no distinct(): an anti-join ignores duplicate build-side keys
         return candidates.join(seen.select(key_col), key_col, "left_anti")
     if prune_shard_col is not None and validate_shards:

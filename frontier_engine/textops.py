@@ -337,6 +337,11 @@ def ngram_jaccard_pairs(
     computes the identical roll, so a collision merges the same two shingle
     groups in both engines — parity is exact by construction; the Jaccard
     estimate itself shifts by ~shingles²/2^32, far below the rounding.
+
+    Jobs at build time: building the frame runs two jobs before any action
+    — the eager checkpoint of the (doc, shingle) table, which scans and
+    shingles ``docs``, and the doc-id bounds ``first()`` over that
+    checkpoint, which picks the packed-long or struct pair path.
     """
     sh = docs.select(
         "doc_id",
@@ -1207,6 +1212,12 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
 
     Output: (doc_id, cluster_id, cluster_size) for every node that appears
     in at least one edge.
+
+    Jobs at build time: the whole fixpoint runs when this is called — the
+    eager checkpoints of the edge list (which evaluates the caller's pair
+    mining) and of the symmetrized edges, then per round one label
+    checkpoint and one changed-row ``count()``.  The returned frame only
+    joins the final labels with their cluster sizes.
     """
     # materialize the edge list ONCE before symmetrizing: the union's two
     # branches otherwise evaluate the caller's whole pair-mining chain
@@ -1303,6 +1314,10 @@ def tfidf_topterms(docs: DataFrame, k: int = 3) -> DataFrame:
     (partial agg) → shuffle join on term → per-doc window.  The inverted-
     index shape; the window is WindowGroupLimit-able (rank ≤ k pushes the
     top-k into the sort).
+
+    Jobs at build time: three, before any action — ``docs.count()`` for N,
+    the eager checkpoint of the (doc, term, tf) table, which tokenizes the
+    corpus, and the vocabulary ``count()`` that guards the df broadcast.
     """
     n_docs = docs.count()  # scalar literal; the oracle uses COUNT(*) the same way
     terms = docs.select(

@@ -144,6 +144,16 @@ def full_bloom_crawl(spark, corpus, seeds):
     return _key_set(res.seen), _page_keys(res.pages)
 
 
+def _assert_last_aux_covers_seen(store, seen):
+    """The filter invariant at crawl level: the last round's persisted aux
+    equals a fresh build over the whole seen set, row for row."""
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("shard_id", "n_keys", "bitmap").collect())
+
+    aux = store.read_aux(store.latest_round(), "bloom", expect_meta=_BLOOM_META)
+    assert rows(aux) == rows(seenmod.build_bloom_shards(seen, n_shards=8, m_bits=1 << 14))
+
+
 def _blake2b_bitmaps(keys_by_shard: dict, m_bits: int):
     """Bitmaps in the layout stores wrote before the JVM hash scheme:
     double hashing over the two halves of blake2b-128(key), in Python."""
@@ -185,6 +195,7 @@ def test_resume_from_old_format_bloom_aux_rebuilds(spark, corpus, seeds, tmp_pat
     assert (_key_set(resumed.seen), _page_keys(resumed.pages)) == full_bloom_crawl
     with open(os.path.join(root, "rounds", f"round_{store.latest_round():05d}", "aux_bloom.json")) as fh:
         assert json.load(fh)["hash"] == seenmod.HASH_SCHEME
+    _assert_last_aux_covers_seen(store, resumed.seen)
 
 
 def test_commit_round_write_failure_waits_and_publishes_nothing(spark, tmp_path):
@@ -263,6 +274,7 @@ def test_resume_after_crash_before_aux_marker_equals_uninterrupted(
 
     resumed = run_crawl(spark, corpus, seeds, CrawlConfig(**_BLOOM, max_rounds=100, checkpoint_dir=root))
     assert (_key_set(resumed.seen), _page_keys(resumed.pages)) == full_bloom_crawl
+    _assert_last_aux_covers_seen(store, resumed.seen)
 
 
 @pytest.mark.parametrize("with_store", [False, True], ids=["checkpoints", "store"])

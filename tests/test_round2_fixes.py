@@ -248,22 +248,22 @@ def test_domain_route_col(spark):
 
 
 def test_retry_beyond_round_seconds_not_abandoned(spark):
-    from frontier_engine.frontier import CrawlConfig, run_crawl
+    from frontier_engine.frontier import MAX_ATTEMPTS, CrawlConfig, run_crawl
 
     corpus = spark.createDataFrame(synth.gen_pages(30), schema=PAGES)
     corpus_urls = [r["url"] for r in corpus.select("url").distinct().collect()]
     missing = [f"https://missing{i}.example.com/x{i}.html" for i in range(5)]
     seeds = corpus_urls + missing  # missing URLs fail → scheduled retries
-    # retry_backoff (8s, doubling) >> round_seconds (2s): without virtual-
+    # RETRY_BACKOFF (8s, doubling) >> round_seconds (2s): without virtual-
     # time fast-forward, the loop would break with retries still pending
-    cfg = CrawlConfig(round_seconds=2.0, max_rounds=50, retry_backoff=8.0)
+    cfg = CrawlConfig(round_seconds=2.0, max_rounds=50)
     res = run_crawl(spark, corpus, seeds, cfg)
     seen_urls = {r["url"] for r in res.seen.select("url").collect()}
-    for u in missing:  # exhausted after max_attempts — never abandoned
+    for u in missing:  # exhausted after MAX_ATTEMPTS — never abandoned
         assert u in seen_urls, u
     assert res.frontier.filter(F.col("status").isin("pending", "retry")).count() == 0
     failed_total = res.metrics.groupBy().sum("failed").collect()[0][0]
-    assert failed_total == len(missing) * cfg.max_attempts
+    assert failed_total == len(missing) * MAX_ATTEMPTS
 
 
 def test_pick_user_agent_deterministic():
@@ -288,18 +288,16 @@ def test_incremental_bloom_multiround_matches_exact(spark):
     corpus = spark.createDataFrame(synth.gen_pages(200), schema=PAGES)
     seeds = synth.parse_seed_lines(synth.gen_seed_lines(200, 120))
     # small quota → many rounds → several merge generations
-    mk = lambda bloom, prune=True: CrawlConfig(  # noqa: E731
+    mk = lambda bloom: CrawlConfig(  # noqa: E731
         round_seconds=30.0, max_rounds=100, use_bloom=bloom,
         bloom_shards=8, bloom_bits_per_shard=1 << 14,
-        max_per_host_per_round=3, prune_seen_shards=prune,
+        max_per_host_per_round=3,
     )
-    # prune_seen_shards defaults ON, so this run exercises the full 10^10
+    # a bloom crawl always prunes, so this run exercises the full 10^10
     # path through run_crawl: bloom pre-filter + shard-pruned confirm join
     with_bloom = run_crawl(spark, corpus, seeds, mk(True))
-    no_prune = run_crawl(spark, corpus, seeds, mk(True, prune=False))
     without = run_crawl(spark, corpus, seeds, mk(False))
     assert with_bloom.rounds > 2  # the incremental path actually ran
     sb = {r["url_key"] for r in with_bloom.seen.collect()}
-    sn = {r["url_key"] for r in no_prune.seen.collect()}
     se = {r["url_key"] for r in without.seen.collect()}
-    assert sb == sn == se
+    assert sb == se

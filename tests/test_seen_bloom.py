@@ -34,7 +34,7 @@ def test_exact_anti_join(dfs):
 def test_bloom_path_identical(dfs):
     seen, cands = dfs
     shards = seenmod.build_bloom_shards(seen, n_shards=8)
-    out = seenmod.filter_unseen(cands, seen, use_bloom=True, shards=shards, n_shards=8)
+    out = seenmod.filter_unseen(cands, seen, shards=shards, n_shards=8)
     keys = {r.url_key for r in out.collect()}
     assert keys == {f"com,ex)/{i}" for i in range(1, 1000, 2)}
 
@@ -44,7 +44,7 @@ def test_bloom_fp_heavy_still_exact(dfs):
     rate; the exact join must still yield the exact answer."""
     seen, cands = dfs
     shards = seenmod.build_bloom_shards(seen, n_shards=8, expected_per_shard=16, fp_rate=0.5)
-    out = seenmod.filter_unseen(cands, seen, use_bloom=True, shards=shards, n_shards=8)
+    out = seenmod.filter_unseen(cands, seen, shards=shards, n_shards=8)
     keys = {r.url_key for r in out.collect()}
     assert keys == {f"com,ex)/{i}" for i in range(1, 1000, 2)}
 
@@ -60,7 +60,7 @@ def test_bloom_shard_pruned_confirm_identical(dfs, spark, tmp_path):
     seen_part = spark.read.parquet(store)
     shards = seenmod.build_bloom_shards(seen, n_shards=n_shards)
     out = seenmod.filter_unseen(
-        cands, seen_part, use_bloom=True, shards=shards, n_shards=n_shards,
+        cands, seen_part, shards=shards, n_shards=n_shards,
         prune_shard_col="shard_id",
     )
     keys = {r.url_key for r in out.collect()}
@@ -111,7 +111,7 @@ def test_shard_contract_mismatch_raises(dfs, spark, tmp_path):
     shards = seenmod.build_bloom_shards(seen, n_shards=8)
     with pytest.raises(ValueError, match="shard column .* violates the pruning contract"):
         seenmod.filter_unseen(
-            cands, seen_part, use_bloom=True, shards=shards, n_shards=8,
+            cands, seen_part, shards=shards, n_shards=8,
             prune_shard_col="shard_id",
         ).collect()
 
@@ -125,7 +125,7 @@ def test_shard_contract_validation_skippable(dfs, spark, tmp_path):
     seen_part = spark.read.parquet(store)
     shards = seenmod.build_bloom_shards(seen, n_shards=8)
     out = seenmod.filter_unseen(
-        cands, seen_part, use_bloom=True, shards=shards, n_shards=8,
+        cands, seen_part, shards=shards, n_shards=8,
         prune_shard_col="shard_id", validate_shards=False,
     )
     keys = {r.url_key for r in out.collect()}

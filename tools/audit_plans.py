@@ -171,7 +171,49 @@ _RUN_COUNTERS = re.compile(r"(#|plan_id=|RDD\[)\d+")
 
 
 def _stable(plan: str) -> str:
-    return _RUN_COUNTERS.sub(r"\1N", plan)
+    return _expand_in_name_order(_RUN_COUNTERS.sub(r"\1N", plan))
+
+
+# Spark's distinct-aggregate rewrite orders the distinct children (the
+# attributes just before ``gid`` in every list) and numbers the distinct
+# groups (``gid`` 1..k) by hashes of expression ids, so both flip between
+# runs.  For a plan with one such Expand, _expand_in_name_order rewrites
+# them in name order: the children, each projection, and the gid literals.
+_EXPAND = re.compile(r"(\(\d+\) Expand\nInput \[\d+\]: \[[^\n]*\]\nArguments: \[)(\[[^\n]*\])\], \[([^\n]*)\]\n")
+_GID = "gid#N"
+
+
+def _expand_in_name_order(plan: str) -> str:
+    found = _EXPAND.findall(plan)
+    if len(found) != 1:
+        return plan
+    _, projs, out = found[0]
+    rows = [p.split(", ") for p in projs[1:-1].split("], [")]
+    out_items = out.split(", ")
+    if _GID not in out_items or any(len(r) != len(out_items) for r in rows):
+        return plan
+    g = out_items.index(_GID)
+    # distinct children: the positions before gid that some projection nulls
+    lo = min((i for i in range(g) if any(r[i] == "null" for r in rows)), default=g)
+    if lo == g or not all(r[g].isdigit() and "null" not in r[:lo] for r in rows):
+        return plan
+    order = sorted(range(g - lo), key=lambda k: out_items[lo + k])
+
+    def reorder(items: list) -> list:
+        return [items[k] for k in order]
+
+    for r in rows:
+        r[lo:g] = reorder(r[lo:g])
+    groups = sorted((r for r in rows if r[g] != "0"), key=lambda r: [x for x in r[lo:g] if x != "null"])
+    gid_map = {r[g]: str(i) for i, r in enumerate(groups, 1)}
+    for r in groups:
+        r[g] = gid_map[r[g]]
+    rows.sort(key=lambda r: int(r[g]))
+    new_args = "[" + "], [".join(", ".join(r) for r in rows) + "]], [" + out + "]\n"
+    plan = _EXPAND.sub(lambda m: m.group(1) + new_args, plan)
+    run = re.compile(r"(?:(?<=\[)|(?<=\()|(?<=, ))((?:[^,\[\]()\n]+, ){%d})(?=%s)" % (g - lo, _GID))
+    plan = run.sub(lambda m: ", ".join(reorder(m.group(1)[:-2].split(", "))) + ", ", plan)
+    return re.sub(r"\(gid#N = (\d+)\)", lambda m: f"(gid#N = {gid_map.get(m.group(1), m.group(1))})", plan)
 
 
 def main():
