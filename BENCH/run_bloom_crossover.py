@@ -6,8 +6,11 @@ that grows without bound) and sweeps the seen-set size with everything else
 fixed, so the crossover point is measurable:
 
 * seen store: synthetic url_keys written as parquet PARTITIONED BY
-  shard_id = pmod(xxhash64(key), n_shards) — the layout the engine's delta
-  snapshots take at scale (every delta is written with its shard column).
+  shard_id = pmod(xxhash64(key), n_shards), so pruning skips whole files.
+  This layout is the bench's own: the engine's SnapshotStore writes seen
+  deltas as (url_key, url, content_hash), with no shard column and no
+  partitioning, and run_crawl recomputes shard_id map-side, so inside the
+  crawl pruning removes rows before the confirm shuffle, not files.
 * candidates: one politeness-quota-bounded round's worth (fixed size),
   10% already-seen (link re-discovery) + 90% new — the crawl regime.
 * exact path  = left-anti join candidates × full seen store (what every
@@ -16,10 +19,10 @@ fixed, so the crossover point is measurable:
   confirm against ONLY the shards that contain a positive
   (``filter_unseen(prune_shard_col=...)``) — partition pruning on the
   store, so confirm cost follows the positive sliver, not the seen size.
-* the one-time shard BUILD is reported separately: production maintains
-  shards incrementally (O(delta) merge_shards per round, see frontier.py),
-  so build cost amortizes over the crawl, while exact pays its full join
-  EVERY round.
+* the one-time shard BUILD is reported separately: run_crawl tops its
+  shards up with each round's new keys (O(delta) ``seen.add_keys``, see
+  frontier.py), so build cost amortizes over the crawl, while exact pays
+  its full join EVERY round.
 
 Method (spark-sandbox-performance): one JVM, interleaved trials, warm-up
 first, best-of-k per (path, size); never concurrent with another bench.

@@ -1048,7 +1048,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- positions 51+: OUTSIDE the driver's 50-entry sweep window.
         # ann_cosine_lsh / ann_cosine_ivf / cardinality_sketch are
         # oracle-less by design (recall contracts in RECALL.json +
-        # tests/test_ann.py; HLL error-bound + merge-identity pytest); the
+        # tests/test_ann_planted.py; HLL error-bound + merge-identity pytest); the
         # stable queries below were displaced in r7 to rotate the twelve
         # r6-displaced scalars back through the window — each has green
         # driver rows in EVERY sweep since registration (r01-r06 /

@@ -392,21 +392,6 @@ def main():
     timings["crawl_pipeline"] = crawl_sec
 
     total = round(time.perf_counter() - t_total0, 3)
-    # machine-checkable ANN contract artifact next to CORRECTNESS (the two
-    # oracle-less queries carry these numbers instead of a DuckDB hash)
-    recalls = {
-        "ann_lsh_recall_at_10": ann_recall,
-        "ann_ivf_recall_at_10": ivf_recall,
-        "ann_ivf_mat_recall_at_10": mat_recall,
-        **planted,
-        "contract": "recall@10 >= 0.6 vs bruteforce; planted-fixture ground truth = cluster mates",
-        "sf": sf_dir,
-    }
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "RECALL.json"), "w") as fh:
-            json.dump(recalls, fh, indent=1)
-    except OSError:
-        pass
     print(
         json.dumps(
             {

@@ -169,16 +169,11 @@ def stream_span_dedup(
     State is bounded by (arrival rate × watermark × ~4 spans/doc), never
     the corpus: each state entry is one md5 key, the exploded span STRING
     is dropped before the stateful operator."""
-    from frontier_engine.textops import tokens_col
+    from frontier_engine.textops import span_exprs
 
     d = spark.readStream.schema(schema).parquet(docs_dir)
     d = d.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    toks = tokens_col(F.col("text"))
-    n_spans = ((F.size(toks) + F.lit(span_tokens - 1)) / F.lit(span_tokens)).cast("int")
-    spans = F.transform(
-        F.sequence(F.lit(0), n_spans - 1),
-        lambda i: F.array_join(F.slice(toks, i * span_tokens + 1, span_tokens), " "),
-    )
+    _, spans = span_exprs(F.col("text"), span_tokens)
     ex = d.select("doc_id", ts_col, F.posexplode(spans).alias("pos", "span"))
     ex = ex.select("doc_id", ts_col, "pos", F.md5("span").alias("span_hash"))
     return (
@@ -193,7 +188,6 @@ def stream_contamination(
     docs_dir: str,
     schema,
     eval_docs: DataFrame,
-    shingle_n: int = 8,
     min_overlap: int = 2,
     ts_col: str = "ts",
     window: str = "1 hour",
@@ -231,26 +225,15 @@ def stream_contamination(
     containment_permille) — the same integer containment normalization as
     the batch op (eval_total is static per eval doc, joined broadcast).
     """
-    from frontier_engine.textops import MINHASH_PRIME, _h60, rolling_shingle_hashes, tokens_col
-
-    def shingle_rows(df, out, keep=()):
-        return df.select(
-            F.col("doc_id").alias(out),
-            *keep,
-            F.transform(tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME).alias("hs"),
-        ).select(
-            out,
-            *keep,
-            F.explode(
-                F.array_distinct(rolling_shingle_hashes(F.col("hs"), shingle_n))
-            ).alias("sh"),
-        )
+    from frontier_engine.textops import LEAK_SHINGLE_N, shingle_rows
 
     # the STATIC eval side feeds two consumers (the denominator count and
     # the broadcast pair join) and is re-evaluated per micro-batch;
     # checkpoint the MB-scale shingle frame once (the batch op's `e`
     # checkpoint, applied to the stream-static side)
-    ev = shingle_rows(eval_docs, "eval_doc_id").localCheckpoint(eager=True)
+    ev = shingle_rows(
+        eval_docs, LEAK_SHINGLE_N, F.col("doc_id").alias("eval_doc_id"), distinct=True
+    ).localCheckpoint(eager=True)
     # eval_total counts ALL distinct eval shingles (batch parity: the stop
     # cap removes shingles from the pair count, not the denominator)
     etot = ev.groupBy("eval_doc_id").agg(F.count(F.lit(1)).alias("eval_total"))
@@ -258,7 +241,9 @@ def stream_contamination(
         ev = ev.join(F.broadcast(stop_shingles), "sh", "left_anti")
     sdf = spark.readStream.schema(schema).parquet(docs_dir)
     sdf = sdf.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    tr = shingle_rows(sdf, "train_doc_id", keep=(ts_col,))
+    tr = shingle_rows(
+        sdf, LEAK_SHINGLE_N, F.col("doc_id").alias("train_doc_id"), ts_col, distinct=True
+    )
     joined = tr.join(F.broadcast(ev), "sh")
     return (
         joined.groupBy(F.window(F.col(ts_col), window), "train_doc_id", "eval_doc_id")

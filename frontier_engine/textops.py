@@ -82,6 +82,15 @@ def minhash_coefficients(n_hashes: int) -> list[tuple[int, int]]:
 
 _ROLL_B = 1000003  # rolling-hash base; B·P < 2^51, no int64 overflow
 
+# The shingle scheme's widths.  The DuckDB oracle twins in __spark_entry__
+# (_SIG_CTES, _BANDS_CTE, _shingle_side_ctes) fix the same values, so they
+# are constants here, not parameters.
+N_HASHES = 8  # minhash salts
+BAND_SIZE = 2  # salts per LSH band
+SHINGLE_N = 3  # word-gram width of the minhash / ngram / winnow family
+WINNOW_WINDOW = 4  # shingle hashes per winnowing window
+LEAK_SHINGLE_N = 8  # word-gram width of the contamination family
+
 
 def rolling_shingle_hashes(hs_col, n: int = 3):
     """Numeric word-``n``-gram hashes from a MATERIALIZED per-token hash
@@ -109,7 +118,37 @@ def rolling_shingle_hashes(hs_col, n: int = 3):
     ).otherwise(F.array().cast("array<long>"))
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
+def token_hashes(text):
+    """Per-token hashes (h60 mod P) of ``text``: what every n-gram hash rolls over."""
+    return F.transform(tokens_col(text), lambda tk: _h60(tk) % MINHASH_PRIME)
+
+
+def shingle_rows(df: DataFrame, n: int, *cols, distinct: bool = False) -> DataFrame:
+    """(*cols, sh): one row per word-``n``-gram hash of ``df.text`` (per
+    DISTINCT hash within the row when ``distinct``); ``cols`` (names or
+    aliased columns) defaults to ``doc_id``.  The token-hash array is
+    projected as its own column first, because rolling_shingle_hashes must
+    read a real column (see there)."""
+    hs = df.select(*(cols or ("doc_id",)), token_hashes(F.col("text")).alias("hs"))
+    sh = rolling_shingle_hashes(F.col("hs"), n)
+    if distinct:
+        sh = F.array_distinct(sh)
+    return hs.select(*hs.columns[:-1], F.explode(sh).alias("sh"))
+
+
+def span_exprs(text, span_tokens: int):
+    """(n_spans, spans) of ``text`` split into consecutive non-overlapping
+    ``span_tokens``-token spans — shared by span_dedup and its stream twin."""
+    toks = tokens_col(text)
+    n_spans = ((F.size(toks) + F.lit(span_tokens - 1)) / F.lit(span_tokens)).cast("int")
+    spans = F.transform(
+        F.sequence(F.lit(0), n_spans - 1),
+        lambda i: F.array_join(F.slice(toks, i * span_tokens + 1, span_tokens), " "),
+    )
+    return n_spans, spans
+
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """MinHash signatures via affine permutations over a prime field: each
     token is hashed ONCE (md5 → 60 bits → mod P), shingle hashes are a
     numeric polynomial roll over the materialized token-hash array (no
@@ -130,39 +169,28 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 8, shingle_n: int = 3) -
     Scale: explode(windows) is the only width increase (~tokens/doc rows),
     followed by one partial-aggregating groupBy — no shuffle of raw text.
     """
-    wide = _minhash_wide(docs, n_hashes, shingle_n)
-    stack = ", ".join(f"{s}, m{s}" for s in range(n_hashes))
+    wide = _minhash_wide(docs)
+    stack = ", ".join(f"{s}, m{s}" for s in range(N_HASHES))
     return wide.selectExpr(
-        "doc_id", f"stack({n_hashes}, {stack}) as (salt_id, minhash)"
+        "doc_id", f"stack({N_HASHES}, {stack}) as (salt_id, minhash)"
     ).select("doc_id", F.col("salt_id").cast("int"), "minhash")
 
 
-def _minhash_wide(docs: DataFrame, n_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """WIDE minhash signatures — (doc_id, m0..m{n-1}), one row per doc with
+def _minhash_wide(docs: DataFrame) -> DataFrame:
+    """WIDE minhash signatures — (doc_id, m0..m7), one row per doc with
     ≥1 shingle window.  The shared core of :func:`minhash_signatures` (which
     stacks it to long form for the oracle) and :func:`lsh_band_keys` (which
     derives band hashes map-side without re-grouping)."""
-    hdf = docs.select(
-        "doc_id",
-        F.transform(
-            tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME
-        ).alias("hs"),
-    )
-    ex = hdf.select(
-        "doc_id", F.explode(rolling_shingle_hashes(F.col("hs"), shingle_n)).alias("x")
-    )
     # one aggregate per salt instead of a salt-explode: 8x fewer shuffled
     # rows (the salts differ only in literal affine coefficients)
     aggs = [
-        F.min((F.lit(a) * (F.col("x") + 1) + F.lit(b)) % MINHASH_PRIME).alias(f"m{s}")
-        for s, (a, b) in enumerate(minhash_coefficients(n_hashes))
+        F.min((F.lit(a) * (F.col("sh") + 1) + F.lit(b)) % MINHASH_PRIME).alias(f"m{s}")
+        for s, (a, b) in enumerate(minhash_coefficients(N_HASHES))
     ]
-    return ex.groupBy("doc_id").agg(*aggs)
+    return shingle_rows(docs, SHINGLE_N).groupBy("doc_id").agg(*aggs)
 
 
-def lsh_band_keys(
-    docs: DataFrame, n_hashes: int = 8, band_size: int = 2, shingle_n: int = 3
-) -> DataFrame:
+def lsh_band_keys(docs: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_hash) LSH band keys — the shared candidate
     key for batch pair-mining (dedup_minhash_lsh) and incremental
     new-vs-index dedup (dedup_minhash_incremental).  Per-doc computation:
@@ -171,18 +199,13 @@ def lsh_band_keys(
     Band hashes are derived MAP-SIDE from the wide signature row (each
     band's members are fixed columns, so the old stack → groupBy(doc,
     band) → collect_list round-trip was a whole extra Exchange for a sort
-    of ``band_size`` known values).  sort_array over the cast strings
+    of ``BAND_SIZE`` known values).  sort_array over the cast strings
     reproduces collect_list+sort_array's STRING ordering exactly, so the
     md5 band keys are bit-identical to the grouped form."""
-    import math as _math
-
-    wide = _minhash_wide(docs, n_hashes, shingle_n)
+    wide = _minhash_wide(docs)
     bands = []
-    for bidx in range(_math.ceil(n_hashes / band_size)):
-        members = [
-            F.col(f"m{s}").cast("string")
-            for s in range(bidx * band_size, min((bidx + 1) * band_size, n_hashes))
-        ]
+    for bidx in range(N_HASHES // BAND_SIZE):
+        members = [F.col(f"m{bidx * BAND_SIZE + j}").cast("string") for j in range(BAND_SIZE)]
         bands.append(
             F.struct(
                 F.lit(bidx).cast("int").alias("band_id"),
@@ -194,18 +217,16 @@ def lsh_band_keys(
     )
 
 
-def dedup_minhash_lsh(
-    docs: DataFrame, n_hashes: int = 8, band_size: int = 2, shingle_n: int = 3
-) -> DataFrame:
+def dedup_minhash_lsh(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs via LSH banding: signature split into
-    ``n_hashes/band_size`` bands; docs sharing (band_id, band_hash) pair up.
+    ``N_HASHES/BAND_SIZE`` bands; docs sharing (band_id, band_hash) pair up.
 
     Scale: candidate generation is a self-join ON THE BAND KEY only —
     quadratic blowup is confined to same-bucket docs (true near-dups plus
     controlled noise), never the full corpus.  AQE skew-join splits a
     pathological bucket.  Output: (doc_a, doc_b) with doc_a < doc_b.
     """
-    bands = lsh_band_keys(docs, n_hashes, band_size, shingle_n)
+    bands = lsh_band_keys(docs)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -318,7 +339,7 @@ def dedup_simhash(docs: DataFrame, bits: int = 60, max_hamming: int = 3) -> Data
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame, shingle_n: int = 3, threshold: float = 0.8, max_docs_per_shingle: int = 100
+    docs: DataFrame, threshold: float = 0.8, max_docs_per_shingle: int = 100
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs above ``threshold``.
 
@@ -343,17 +364,7 @@ def ngram_jaccard_pairs(
     shingles ``docs``, and the doc-id bounds ``first()`` over that
     checkpoint, which picks the packed-long or struct pair path.
     """
-    sh = docs.select(
-        "doc_id",
-        F.transform(
-            tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME
-        ).alias("hs"),
-    ).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(rolling_shingle_hashes(F.col("hs"), shingle_n))
-        ).alias("sh"),
-    )
+    sh = shingle_rows(docs, SHINGLE_N, distinct=True)
     # two plan branches (sizes, grouped postings) consume sh; without
     # materialization each branch re-parses and re-shingles the corpus
     # (measured 3× the dominant cost at sf0.1: 10.6 s → 6.5 s).  the
@@ -987,8 +998,8 @@ def quality_classifier(
     faster per token, SCALE.md round-7), at the cost of the SQL twin.
     """
     m = 2 * half_range + 1
-    toks = tokens_col(F.col("text"))
     if use_xxhash:
+        toks = tokens_col(F.col("text"))
         # pmod, not abs(..)%: abs(Long.MIN_VALUE) stays negative in
         # non-ANSI Spark, so a 2^-64-probability hash would put a weight
         # outside [-half_range, half_range] and break the documented
@@ -996,7 +1007,7 @@ def quality_classifier(
         hs_expr = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(MINHASH_PRIME)))
         w = lambda h: F.pmod(F.xxhash64(F.lit("w#"), h), F.lit(m)) - half_range  # noqa: E731
     else:
-        hs_expr = F.transform(toks, lambda t: _h60(t) % MINHASH_PRIME)
+        hs_expr = token_hashes(F.col("text"))
         w = lambda h: _h60(F.concat(F.lit("w#"), h.cast("string"))) % m - half_range  # noqa: E731
     d = docs.select("doc_id", hs_expr.alias("hs"))
     d = d.select(
@@ -1051,12 +1062,7 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     groupBys here compress map-side and never shuffle raw text, so the
     codegen'd aggregation beats interpreted array ops.
     """
-    hdf = docs.select(
-        "doc_id",
-        F.transform(
-            tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME
-        ).alias("hs"),
-    ).localCheckpoint(eager=True)
+    hdf = docs.select("doc_id", token_hashes(F.col("text")).alias("hs")).localCheckpoint(eager=True)
     out = docs.select("doc_id")
     for n, label in ((2, "bigram"), (3, "trigram")):
         grams = hdf.select(
@@ -1080,17 +1086,17 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     )
 
 
-def winnow_fingerprints(docs: DataFrame, shingle_n: int = 3, window: int = 4) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD 2003 —
-    the MOSS local fingerprinting algorithm): hash every word ``shingle_n``-
-    gram, slide a window of ``window`` consecutive hashes, keep the minimum
-    per window, emit each doc's DISTINCT selected hashes.
+    the MOSS local fingerprinting algorithm): hash every word ``SHINGLE_N``-
+    gram, slide a window of ``WINNOW_WINDOW`` consecutive hashes, keep the
+    minimum per window, emit each doc's DISTINCT selected hashes.
 
-    Guarantee: any run of ``window + shingle_n − 1`` shared tokens between
-    two documents shares at least one fingerprint — the robust near-dup /
-    plagiarism primitive when full Jaccard is too expensive.  Docs shorter
-    than one window contribute their global min (docs with no shingle emit
-    nothing).
+    Guarantee: any run of ``WINNOW_WINDOW + SHINGLE_N − 1`` shared tokens
+    between two documents shares at least one fingerprint — the robust
+    near-dup / plagiarism primitive when full Jaccard is too expensive.
+    Docs shorter than one window contribute their global min (docs with no
+    shingle emit nothing).
 
     Scale: the hash sequence, the sliding windows and the per-window min
     are ALL array expressions evaluated per row (no shuffle); the only
@@ -1106,22 +1112,15 @@ def winnow_fingerprints(docs: DataFrame, shingle_n: int = 3, window: int = 4) ->
     hashes are the numeric polynomial roll (rolling_shingle_hashes); no
     shingle strings are built.
     """
-    hdf = docs.select(
-        "doc_id",
-        F.transform(
-            tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME
-        ).alias("hs"),
-    )
-    sdf = hdf.select(
-        "doc_id", rolling_shingle_hashes(F.col("hs"), shingle_n).alias("sh")
-    )
+    hdf = docs.select("doc_id", token_hashes(F.col("text")).alias("hs"))
+    sdf = hdf.select("doc_id", rolling_shingle_hashes(F.col("hs"), SHINGLE_N).alias("sh"))
     sh = F.col("sh")
     wins = (
         F.when(
-            F.size(sh) >= window,
+            F.size(sh) >= WINNOW_WINDOW,
             F.transform(
-                F.sequence(F.lit(0), F.size(sh) - window),
-                lambda i: F.array_min(F.slice(sh, i + 1, window)),
+                F.sequence(F.lit(0), F.size(sh) - WINNOW_WINDOW),
+                lambda i: F.array_min(F.slice(sh, i + 1, WINNOW_WINDOW)),
             ),
         )
         .when(F.size(sh) > 0, F.array(F.array_min(sh)))
@@ -1288,11 +1287,11 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     )
 
 
-def dedup_clusters(docs: DataFrame, n_hashes: int = 8, band_size: int = 2) -> DataFrame:
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """MinHash-LSH near-dup clusters: candidate pairs from
     dedup_minhash_lsh, grouped into connected components.  The full dedup
     decision pipeline: keep ``doc_id == cluster_id`` rows, drop the rest."""
-    return connected_components(dedup_minhash_lsh(docs, n_hashes=n_hashes, band_size=band_size))
+    return connected_components(dedup_minhash_lsh(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -1463,13 +1462,12 @@ def token_budget_sample(
 def contamination_pairs(
     train: DataFrame,
     eval_docs: DataFrame,
-    shingle_n: int = 8,
     min_overlap: int = 2,
     max_train_docs_per_shingle: int = 100,
     max_broadcast_shingles: int = 8_000_000,
 ) -> DataFrame:
     """Train/eval contamination detection: for each (train doc, eval doc)
-    pair, count the DISTINCT word-``shingle_n``-gram hashes they share and
+    pair, count the DISTINCT word-``LEAK_SHINGLE_N``-gram hashes they share and
     report pairs with ≥ ``min_overlap`` shared shingles plus the eval-side
     containment (shared / eval-distinct, in permille — integer, so the SQL
     twin agrees exactly).  This is the benchmark-leakage check every
@@ -1508,21 +1506,8 @@ def contamination_pairs(
     guard.  The checkpointed blocks are EVAL-sized (MBs under the
     contract), pinned until the returned frame is garbage collected.
     """
-    def side(df, out):
-        return df.select(
-            F.col("doc_id").alias(out),
-            F.transform(
-                tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME
-            ).alias("hs"),
-        ).select(
-            out,
-            F.explode(
-                F.array_distinct(rolling_shingle_hashes(F.col("hs"), shingle_n))
-            ).alias("sh"),
-        )
-
-    t = side(train, "train_doc_id")
-    e = side(eval_docs, "eval_doc_id")
+    t = shingle_rows(train, LEAK_SHINGLE_N, F.col("doc_id").alias("train_doc_id"), distinct=True)
+    e = shingle_rows(eval_docs, LEAK_SHINGLE_N, F.col("doc_id").alias("eval_doc_id"), distinct=True)
     # size-guarded broadcast: measure the small side (one job over eval
     # only), broadcast iff it fits the contract, else shuffle-join — the
     # guard makes the "eval suite is MBs" assumption executable.  The
@@ -1571,12 +1556,8 @@ def contamination_pairs(
     )
 
 
-def hot_train_shingles(
-    train: DataFrame,
-    shingle_n: int = 8,
-    max_train_docs_per_shingle: int = 100,
-) -> DataFrame:
-    """Corpus-wide stop-shingle list: the distinct word-``shingle_n``-gram
+def hot_train_shingles(train: DataFrame, max_train_docs_per_shingle: int = 100) -> DataFrame:
+    """Corpus-wide stop-shingle list: the distinct word-``LEAK_SHINGLE_N``-gram
     hashes whose train document frequency exceeds
     ``max_train_docs_per_shingle`` — the boilerplate grams
     :func:`contamination_pairs` drops before pairing (there, counted over
@@ -1591,17 +1572,9 @@ def hot_train_shingles(
     shingles; the result is tiny by construction (only grams repeated
     across >cap documents survive).
     """
-    t = train.select(
-        "doc_id",
-        F.transform(
-            tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME
-        ).alias("hs"),
-    ).select(
-        "doc_id",
-        F.explode(F.array_distinct(rolling_shingle_hashes(F.col("hs"), shingle_n))).alias("sh"),
-    )
     return (
-        t.groupBy("sh")
+        shingle_rows(train, LEAK_SHINGLE_N, distinct=True)
+        .groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > max_train_docs_per_shingle)
         .select("sh")
@@ -1636,12 +1609,7 @@ def span_dedup(docs: DataFrame, span_tokens: int = 16) -> DataFrame:
     cleaned text is emitted as ``clean_hash`` (md5), with span counts for
     the rate check.
     """
-    toks = tokens_col(F.col("text"))
-    n_spans = ((F.size(toks) + F.lit(span_tokens - 1)) / F.lit(span_tokens)).cast("int")
-    spans = F.transform(
-        F.sequence(F.lit(0), n_spans - 1),
-        lambda i: F.array_join(F.slice(toks, i * span_tokens + 1, span_tokens), " "),
-    )
+    n_spans, spans = span_exprs(F.col("text"), span_tokens)
     ex = docs.select("doc_id", F.posexplode(spans).alias("pos", "span"))
     kept = (
         ex.groupBy(F.md5("span").alias("span_hash"))
@@ -1700,10 +1668,6 @@ def duplicate_ngram_coverage(docs: DataFrame, n: int = 8, min_df: int = 2) -> Da
     100 TB budget executor storage for tokens×8 bytes or let blocks spill
     to disk — MEMORY_AND_DISK is the checkpoint default).
     """
-    ex = docs.select(
-        "doc_id",
-        F.transform(tokens_col(F.col("text")), lambda tk: _h60(tk) % MINHASH_PRIME).alias("hs"),
-    ).select("doc_id", F.explode(rolling_shingle_hashes(F.col("hs"), n)).alias("g"))
     # collapse gram INSTANCES to per-(doc, gram) counts first — one
     # partial-aggregating shuffle — and checkpoint THAT: the df count, the
     # per-doc totals and the coverage semi-join all derive from c exactly
@@ -1711,21 +1675,21 @@ def duplicate_ngram_coverage(docs: DataFrame, n: int = 8, min_df: int = 2) -> Da
     # distinct), so the old separate distinct shuffle and the semi-join
     # over raw instances disappear (guide §2.3 aggregate-before-shuffle)
     c = (
-        ex.groupBy("doc_id", "g")
+        shingle_rows(docs, n).groupBy("doc_id", "sh")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)
     )
     dup = (
-        c.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+        c.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") >= min_df)
-        .select("g")
+        .select("sh")
     )
     # (measured: broadcasting dup is a wash — at min_df=2 the dup-gram set
     # is a large fraction of the vocabulary, so the broadcast build costs
-    # what the by-g shuffle of the pre-collapsed c costs; the shuffle
+    # what the by-sh shuffle of the pre-collapsed c costs; the shuffle
     # semi-join also keeps the op safe for corpora whose dup set is huge)
     inst = c.groupBy("doc_id").agg(F.sum("c").alias("n_grams"))
-    cov = c.join(dup, "g", "left_semi").groupBy("doc_id").agg(
+    cov = c.join(dup, "sh", "left_semi").groupBy("doc_id").agg(
         F.sum("c").alias("dup_grams")
     )
     return (
@@ -1780,19 +1744,16 @@ def keep_best_by_quality(clusters: DataFrame, docs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_clusters_keep_best(docs: DataFrame, n_hashes: int = 8, band_size: int = 2) -> DataFrame:
+def dedup_clusters_keep_best(docs: DataFrame) -> DataFrame:
     """MinHash-LSH near-dup clusters with quality-aware representatives:
     :func:`dedup_clusters` → :func:`keep_best_by_quality`.  The dedup
     DECISION becomes "keep ``keep_doc_id``, drop the rest of the cluster"
     — same clusters, better survivors."""
-    return keep_best_by_quality(dedup_clusters(docs, n_hashes=n_hashes, band_size=band_size), docs)
+    return keep_best_by_quality(dedup_clusters(docs), docs)
 
 
 def decontaminate(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    containment_threshold_permille: int = 500,
-    **contamination_kwargs,
+    train: DataFrame, eval_docs: DataFrame, containment_threshold_permille: int = 500
 ) -> DataFrame:
     """Act on :func:`contamination_pairs`: drop every train document that
     participates in a pair whose eval-side containment reaches
@@ -1810,7 +1771,7 @@ def decontaminate(
     unchanged.
     """
     flagged = (
-        contamination_pairs(train, eval_docs, **contamination_kwargs)
+        contamination_pairs(train, eval_docs)
         .filter(F.col("containment_permille") >= containment_threshold_permille)
         .select(F.col("train_doc_id").alias("doc_id"))
         .distinct()
@@ -2265,13 +2226,7 @@ def host_quality_filter(
     )
 
 
-def dedup_minhash_incremental(
-    new_docs: DataFrame,
-    index_docs: DataFrame,
-    n_hashes: int = 8,
-    band_size: int = 2,
-    shingle_n: int = 3,
-) -> DataFrame:
+def dedup_minhash_incremental(new_docs: DataFrame, index_docs: DataFrame) -> DataFrame:
     """Incremental near-dup dedup: drop NEW documents that LSH-band-collide
     with ANY document already in the INDEX corpus — the daily-ingest shape
     (today's crawl vs the historical index), where re-running pairwise
@@ -2287,12 +2242,8 @@ def dedup_minhash_incremental(
     key row via the distinct's partial aggregation.
 
     Returns surviving new_docs rows (all columns)."""
-    newb = lsh_band_keys(new_docs, n_hashes, band_size, shingle_n)
-    idxb = (
-        lsh_band_keys(index_docs, n_hashes, band_size, shingle_n)
-        .select("band_id", "band_hash")
-        .distinct()
-    )
+    newb = lsh_band_keys(new_docs)
+    idxb = lsh_band_keys(index_docs).select("band_id", "band_hash").distinct()
     hit = (
         newb.join(idxb, ["band_id", "band_hash"], "left_semi")
         .select("doc_id")
@@ -2407,13 +2358,7 @@ def anchor_rollup_from_pages(pages: DataFrame, max_anchor_chars: int = 64) -> Da
 
 
 def write_band_index(
-    index_docs: DataFrame,
-    table_name: str,
-    path: str,
-    n_hashes: int = 8,
-    band_size: int = 2,
-    shingle_n: int = 3,
-    n_buckets: int = 64,
+    index_docs: DataFrame, table_name: str, path: str, n_buckets: int = 64
 ) -> None:
     """Persist the historical index's DISTINCT LSH band keys as a
     bucketed, bucket-sorted table — the store side of daily incremental
@@ -2431,7 +2376,7 @@ def write_band_index(
     current without rewrites.
     """
     keys = (
-        lsh_band_keys(index_docs, n_hashes, band_size, shingle_n)
+        lsh_band_keys(index_docs)
         .select(F.concat_ws("#", "band_id", "band_hash").alias("band_key"))
         .distinct()
     )
@@ -2445,20 +2390,13 @@ def write_band_index(
     )
 
 
-def dedup_minhash_incremental_bucketed(
-    new_docs: DataFrame,
-    spark,
-    table_name: str,
-    n_hashes: int = 8,
-    band_size: int = 2,
-    shingle_n: int = 3,
-) -> DataFrame:
+def dedup_minhash_incremental_bucketed(new_docs: DataFrame, spark, table_name: str) -> DataFrame:
     """``dedup_minhash_incremental`` against a persisted band-key store
     (``write_band_index``): identical survivors, but the index side scans
     pre-bucketed — only the day's delta shuffles.  Plan-asserted single
     Exchange in tests/test_round6b.py (same contract as the bucketed
     URL-seen gate, ``seen.write_bucketed_seen``)."""
-    newb = lsh_band_keys(new_docs, n_hashes, band_size, shingle_n).select(
+    newb = lsh_band_keys(new_docs).select(
         "doc_id", F.concat_ws("#", "band_id", "band_hash").alias("band_key")
     )
     hit = (

@@ -36,7 +36,7 @@ def test_every_query_has_oracle_or_is_documented():
     assert not missing, f"oracle entries without a query: {missing}"
     no_oracle = set(qs) - set(osql)
     # only genuinely non-SQL-expressible ops may omit the oracle: the ANN
-    # pair (recall contract in RECALL.json + tests/test_ann.py) and the HLL
+    # pair (recall contract in RECALL.json + tests/test_ann_planted.py) and the HLL
     # sketch estimate (implementation-specific estimator; error-bound +
     # merge tests in test_round6.py)
     assert no_oracle <= {"ann_cosine_lsh", "ann_cosine_ivf", "cardinality_sketch"}, no_oracle

@@ -128,3 +128,17 @@ def test_rolling_shingle_hashes_matches_reference(spark, hs, n):
 
     want = [ref_window(i) for i in range(len(hs) - n + 1)] if len(hs) >= n else []
     assert got == want
+
+
+def test_shingle_rows_hashes_tokens_before_the_explode(spark):
+    """shingle_rows projects the token-hash array as its own column, so the
+    Generate that explodes the rolling windows reads that column and calls
+    no md5: inlined into the explode, every window re-hashes its tokens
+    (O(tokens²) md5 calls; see rolling_shingle_hashes).  Plans only."""
+    from frontier_engine.textops import shingle_rows
+
+    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    plan = shingle_rows(df, 3)._jdf.queryExecution().executedPlan().toString()
+    generate = [line for line in plan.splitlines() if "Generate " in line]
+    assert len(generate) == 1
+    assert "md5(" not in generate[0]

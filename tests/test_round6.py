@@ -24,7 +24,7 @@ DRIVER_SWEEP_CAP = 50
 # a fresh driver row.  Everything else must be inside the sweep window.
 PAST_CAP_ALLOWED = {
     # oracle-less by design: recall contracts live in RECALL.json (bench
-    # artifact) + tests/test_ann.py; a rows-only driver row adds nothing.
+    # artifact) + tests/test_ann_planted.py; a rows-only sweep row adds nothing.
     "ann_cosine_lsh": "oracle-less; RECALL.json + pytest recall contract",
     "ann_cosine_ivf": "oracle-less; RECALL.json + pytest recall contract",
     # sketch estimates are implementation-specific (DataSketches HLL vs

@@ -2,7 +2,7 @@
 
 The winnowing test exercises the algorithm's PAPER guarantee (Schleimer,
 Wilkerson & Aiken 2003): two documents sharing a token run of at least
-window + shingle_n − 1 tokens share at least one fingerprint.
+WINNOW_WINDOW + SHINGLE_N − 1 tokens share at least one fingerprint.
 """
 
 import pyspark.sql.functions as F
