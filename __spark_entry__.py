@@ -458,14 +458,11 @@ def q_ann_cosine_topk(spark, sf):
 _IVF_CENTROIDS: dict[str, list[list[float]]] = {}
 
 
-def ivf_centroids(spark, sf, n_clusters: int = 16, iters: int = 3):
+def ivf_centroids(spark, sf):
     """Build (or fetch cached) IVF centroids for the sf_dir's embeddings."""
-    key = f"{sf}:{n_clusters}:{iters}"
-    if key not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[key] = textops.build_ivf_index(
-            _t(spark, sf, "embeddings"), n_clusters=n_clusters, iters=iters
-        )
-    return _IVF_CENTROIDS[key]
+    if sf not in _IVF_CENTROIDS:
+        _IVF_CENTROIDS[sf] = textops.kmeans_centroids(_t(spark, sf, "embeddings"))
+    return _IVF_CENTROIDS[sf]
 
 
 def q_ann_cosine_ivf(spark, sf):
@@ -475,7 +472,7 @@ def q_ann_cosine_ivf(spark, sf):
     algorithm; contract = recall@k pytest vs the oracle-checked bruteforce
     baseline + the driver's rows-only check."""
     return textops.cosine_topk_ivf(
-        _t(spark, sf, "embeddings"), [0, 1, 2, 3, 4], k=10, centroids=ivf_centroids(spark, sf)
+        _t(spark, sf, "embeddings"), [0, 1, 2, 3, 4], ivf_centroids(spark, sf), k=10
     )
 
 
@@ -483,7 +480,7 @@ def q_dedup_embedding(spark, sf):
     """5th dedup family member: embedding-cosine near-dup pairs via a
     single-table LSH bucket self-join + exact cosine verify (the bucketing
     is mirrored bit-for-bit in the DuckDB twin)."""
-    return textops.dedup_embedding_cosine(_t(spark, sf, "embeddings"), threshold=0.3)
+    return textops.dedup_embedding_cosine(_t(spark, sf, "embeddings"))
 
 
 def q_lang_id(spark, sf):
@@ -507,19 +504,8 @@ def q_doc_fingerprint(spark, sf):
 
 
 def q_embedding_norms(spark, sf):
-    emb = _t(spark, sf, "embeddings")
-    return emb.select(
-        "vec_id",
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-                    F.lit(0.0),
-                    lambda a, v: a + v,
-                )
-            ),
-            4,
-        ).alias("l2_norm"),
+    return _t(spark, sf, "embeddings").select(
+        "vec_id", F.round(textops._norm(F.col("embedding")), 4).alias("l2_norm")
     )
 
 

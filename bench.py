@@ -1,6 +1,7 @@
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR on
 local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": "urls_fetched_deduped_per_sec", "value": n_seen / crawl_sec,
+ "unit": "urls/sec", "total_sec": ..., "queries": {...}, "sf": ..., ...}
 
 Each query is forced through the noop sink (full materialization, no
 driver-side collect cost).  The crawl benchmark synthesizes its own corpus
@@ -157,7 +158,7 @@ def ann_planted_recalls(spark, n_queries: int = 5, k: int = 10) -> dict[str, flo
         hits = sum(len(got.get(q, set()) & mates[q]) for q in qids)
         return round(hits / (len(qids) * k), 3)
 
-    centroids = textops.build_ivf_index(emb)
+    centroids = textops.kmeans_centroids(emb)
     idx_dir = os.path.join(tempfile.gettempdir(), "bench_planted_ivf_index")
     textops.materialize_ivf(emb, centroids, idx_dir)
     qvecs = {
@@ -167,7 +168,7 @@ def ann_planted_recalls(spark, n_queries: int = 5, k: int = 10) -> dict[str, flo
     return {
         "planted_lsh_recall_at_10": recall(textops.cosine_topk_lsh(emb, qids, k=k)),
         "planted_ivf_recall_at_10": recall(
-            textops.cosine_topk_ivf(emb, qids, k=k, centroids=centroids)
+            textops.cosine_topk_ivf(emb, qids, centroids, k=k)
         ),
         "planted_ivf_mat_recall_at_10": recall(
             textops.cosine_topk_ivf_materialized(spark, idx_dir, centroids, qvecs, k=k)

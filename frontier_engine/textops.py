@@ -443,6 +443,14 @@ def ngram_jaccard_pairs(
 # similarity search over embeddings
 # ---------------------------------------------------------------------------
 
+# ANN widths no caller varies: cosine_topk_lsh's tables × sign bits, and
+# dedup_embedding_cosine's planes and cosine cut, which its DuckDB twin pins
+# (``generate_series(0, 7)``, ``cosine >= 0.3``).
+LSH_PLANES = 6
+LSH_TABLES = 6
+DEDUP_EMB_PLANES = 8
+DEDUP_EMB_THRESHOLD = 0.3
+
 
 def _plane_row(prefix: str, dim: int) -> list[float]:
     """±1 hyperplane components, precomputed DRIVER-SIDE.
@@ -524,6 +532,43 @@ def _norm(a):
     )
 
 
+def _cosine(a, na, b, nb):
+    """Exact cosine of two vectors from their precomputed norms, rounded to
+    6 places (the oracle's rounding)."""
+    return F.round(_dot(a, b) / (na * nb), 6)
+
+
+def _vectors(emb: DataFrame, side: str, *extra) -> DataFrame:
+    """One side of a cosine pair join: ``(query_id, qe, qn, *extra)`` for
+    ``side="query"``, ``(cand_id, ce, cn, *extra)`` for ``side="cand"``.
+    Norms per side, not per pair (guide §2.3): the same sqrt values reach
+    the division, but the per-pair cost drops from 3 folds to 1 (the dot)."""
+    p = "q" if side == "query" else "c"
+    return emb.select(
+        F.col("vec_id").alias(f"{side}_id"),
+        F.col("embedding").alias(f"{p}e"),
+        _norm(F.col("embedding")).alias(f"{p}n"),
+        *extra,
+    )
+
+
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, cand_id, cosine) of joined sides, self-pairs dropped."""
+    return (
+        pairs.filter(F.col("query_id") != F.col("cand_id"))
+        .withColumn("cosine", _cosine(F.col("qe"), F.col("qn"), F.col("ce"), F.col("cn")))
+        .select("query_id", "cand_id", "cosine")
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best candidates per query: cosine desc, ties by cand_id."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def cosine_topk_bruteforce(emb: DataFrame, query_ids: list[int], k: int = 10) -> DataFrame:
     """Baseline ANN: exact cosine top-k for each query vector.
 
@@ -531,45 +576,23 @@ def cosine_topk_bruteforce(emb: DataFrame, query_ids: list[int], k: int = 10) ->
     pass, no shuffle except the final per-query top-k (window).  All math
     native (zip_with/aggregate): stays in codegen, no Python.
     """
-    from pyspark.sql import Window
-
-    # norms precomputed per SIDE (guide §2.3: don't redo per-pair work the
-    # join multiplies): same sqrt values reach the division, bit-identical
-    # cosine, but the per-pair cost drops from 3 folds to 1 (the dot)
-    q = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
-        _norm(F.col("embedding")).alias("qn"),
-    )
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"),
-        _norm(F.col("embedding")).alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(cand)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("cosine", F.round(_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 6))
-        .select("query_id", "cand_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q = _vectors(emb.filter(F.col("vec_id").isin(query_ids)), "query")
+    return _top_k(_scored(F.broadcast(q).crossJoin(_vectors(emb, "cand"))), k)
 
 
-def cosine_topk_lsh(
-    emb: DataFrame, query_ids: list[int], k: int = 10, n_planes: int = 6, n_tables: int = 6
-) -> DataFrame:
+def cosine_topk_lsh(emb: DataFrame, query_ids: list[int], k: int = 10) -> DataFrame:
     """Scale path: MULTI-TABLE random-hyperplane LSH with Hamming-1
     multi-probe, then exact cosine only on candidates that collide with the
     query in at least one table.
 
     Structure (the standard LSH recall/selectivity trade):
-      * ``n_tables`` independent hash tables of ``n_planes`` sign bits each;
-        recall across tables composes as 1-(1-q)^L while each table stays
-        selective.
-      * the QUERY side probes, per table, its own bucket plus all n_planes
-        Hamming-1 neighbor buckets — (n_planes+1)·n_tables probe rows on the
-        broadcast side only.
-      * the CANDIDATE side computes its n_tables buckets map-side (never
+      * ``LSH_TABLES`` independent hash tables of ``LSH_PLANES`` sign bits
+        each; recall across tables composes as 1-(1-q)^L while each table
+        stays selective.
+      * the QUERY side probes, per table, its own bucket plus all
+        LSH_PLANES Hamming-1 neighbor buckets — (LSH_PLANES+1)·LSH_TABLES
+        probe rows on the broadcast side only.
+      * the CANDIDATE side computes its LSH_TABLES buckets map-side (never
         shuffled; the join is broadcast-hash against the tiny probe set).
       * a pair colliding in several tables is deduped AFTER scoring
         (cosine is deterministic, so keep-any is safe).
@@ -579,24 +602,25 @@ def cosine_topk_lsh(
     construction; the bruteforce operator is the oracle-checked baseline and
     tests/test_round2_fixes.py asserts recall@k ≥ 0.6 vs bruteforce (bench.py
     reports the measured recall per round).
-    """
-    from pyspark.sql import Window
 
+    Building the query runs one job: the single-row ``first()`` that probes
+    the embedding width for the plane matrix.
+    """
     # all T·P sign bits in one gemm per Arrow batch (see _bucket_udf); the
     # dim probe is a single-row job (uniform-dim schema contract)
     max_dim = emb.select(F.size("embedding")).first()[0]
-    buckets = _bucket_udf(n_tables, n_planes, max_dim)
+    buckets = _bucket_udf(LSH_TABLES, LSH_PLANES, max_dim)
 
     def probes_from_bucket(b, t: int):
         # [bucket, all Hamming-1 flips] of an ALREADY-MATERIALIZED bucket
         # string column — the flips are cheap substr ops over the string, so
-        # the UDF runs once per row, not (n_planes+1)× per table
+        # the UDF runs once per row, not (LSH_PLANES+1)× per table
         flips = F.transform(
-            F.sequence(F.lit(1), F.lit(n_planes)),  # 1-based bit position
+            F.sequence(F.lit(1), F.lit(LSH_PLANES)),  # 1-based bit position
             lambda i: F.concat(
                 F.substr(b, F.lit(1), i - 1),
                 F.when(F.substr(b, i, F.lit(1)) == "1", F.lit("0")).otherwise(F.lit("1")),
-                F.substr(b, i + 1, F.lit(n_planes) - i),
+                F.substr(b, i + 1, F.lit(LSH_PLANES) - i),
             ),
         )
         return F.transform(
@@ -604,44 +628,23 @@ def cosine_topk_lsh(
             lambda pb: F.struct(F.lit(t).alias("table_id"), pb.alias("probe")),
         )
 
-    qb = emb.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        _norm(F.col("embedding")).alias("qn"),
-        buckets(F.col("embedding")).alias("__bk"),
+    qb = _vectors(
+        emb.filter(F.col("vec_id").isin(query_ids)), "query", buckets(F.col("embedding")).alias("__bk")
     )
-    q = (
-        qb.select(
-            "query_id",
-            "qe",
-            "qn",
-            F.explode(
-                F.flatten(F.array(*[probes_from_bucket(F.col("__bk")[t], t) for t in range(n_tables)]))
-            ).alias("tp"),
-        )
-        .select("query_id", "qe", "qn", F.col("tp.table_id").alias("table_id"), F.col("tp.probe").alias("probe"))
+    tp = F.flatten(F.array(*[probes_from_bucket(F.col("__bk")[t], t) for t in range(LSH_TABLES)]))
+    q = qb.select("query_id", "qe", "qn", F.explode(tp).alias("tp")).select(
+        "query_id", "qe", "qn", F.col("tp.table_id").alias("table_id"), F.col("tp.probe").alias("probe")
     )
     # norm computed BEFORE the per-table posexplode (once per vector, not
     # once per (vector, table) row, and never per pair)
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("ce"),
-        _norm(F.col("embedding")).alias("cn"),
-        buckets(F.col("embedding")).alias("__cbk"),
-    ).select(
+    cand = _vectors(emb, "cand", buckets(F.col("embedding")).alias("__cbk")).select(
         "cand_id", "ce", "cn", F.posexplode(F.col("__cbk")).alias("ct", "cb")
     )
-    scored = (
-        F.broadcast(q)
-        # equi-join on BOTH keys → broadcast hash join, not a per-table scan
-        .join(cand, (F.col("table_id") == F.col("ct")) & (F.col("probe") == F.col("cb")), "inner")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("cosine", F.round(_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 6))
-        .select("query_id", "cand_id", "cosine")
-        .dropDuplicates(["query_id", "cand_id"])  # pair may collide in >1 table
+    pairs = F.broadcast(q).join(  # equi-join on BOTH keys → broadcast hash join, not a per-table scan
+        cand, (F.col("table_id") == F.col("ct")) & (F.col("probe") == F.col("cb")), "inner"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    # a pair may collide in >1 table
+    return _top_k(_scored(pairs).dropDuplicates(["query_id", "cand_id"]), k)
 
 
 def _sqdist(e, lit_centroid):
@@ -667,7 +670,12 @@ def kmeans_centroids(emb: DataFrame, k: int = 16, iters: int = 3) -> list[list[f
     dim) avg — ONE narrow aggregation; k·dim rows return to the driver,
     which is KBs at any corpus size).  This is the classic Spark k-means
     loop shape (same as MLlib's): per-iteration driver state is exactly the
-    centroid matrix, never row data."""
+    centroid matrix, never row data.
+
+    Runs ``1 + iters`` jobs: one collect of the k init vectors, then one
+    collect per iteration.  This is the IVF index build: train once, pass
+    the centroids to every :func:`cosine_topk_ivf` /
+    :func:`materialize_ivf` call."""
     init = (
         emb.select("vec_id", "embedding")
         .withColumn("h", F.xxhash64(F.col("vec_id").cast("string")))
@@ -693,32 +701,18 @@ def kmeans_centroids(emb: DataFrame, k: int = 16, iters: int = 3) -> list[list[f
     return centroids
 
 
-def build_ivf_index(emb: DataFrame, n_clusters: int = 16, iters: int = 3) -> list[list[float]]:
-    """One-time IVF index build: train the k-means coarse quantizer and
-    return the centroid matrix (k·dim floats — KBs at any corpus size).
-
-    Split out of the query path (VERDICT r2 #3): at scale the index is
-    built ONCE, the assignment is materialized (``assign_clusters`` with the
-    table partitioned by cluster_id so a probe prunes whole files), and many
-    queries amortize it.  bench.py reports this build as its own line
-    (``ann_ivf_build``) and times the registered query with prebuilt
-    centroids."""
-    return kmeans_centroids(emb, k=n_clusters, iters=iters)
-
-
 def cosine_topk_ivf(
     emb: DataFrame,
     query_ids: list[int],
+    centroids: list[list[float]],
     k: int = 10,
-    n_clusters: int = 16,
     n_probe: int = 8,
-    iters: int = 3,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """IVF ANN (the coarse-quantizer alternative to cosine_topk_lsh, per the
-    driver mandate 'IVF or LSH'): k-means-partition the corpus once, then
-    each query exactly scores ONLY the ``n_probe`` clusters whose centroids
-    are nearest to it — scanning n_probe/n_clusters of the corpus instead
+    """IVF ANN (the coarse-quantizer alternative to cosine_topk_lsh): with
+    the corpus k-means-partitioned by ``centroids`` (from
+    :func:`kmeans_centroids`, built once and shared across queries), each
+    query exactly scores ONLY the ``n_probe`` clusters whose centroids are
+    nearest to it — scanning n_probe/len(centroids) of the corpus instead
     of all of it.
 
     Scale shape: the corpus is assigned map-side against literal centroids
@@ -727,41 +721,19 @@ def cosine_topk_ivf(
     side (probe lists) is broadcast.  Iterative and therefore not
     SQL-expressible — contract is the recall@k test vs bruteforce
     (tests/test_round2_fixes.py).
-
-    Pass prebuilt ``centroids`` (from :func:`build_ivf_index`) to amortize
-    the training across queries; omitting it trains in-query (tests only).
     """
-    from pyspark.sql import Window
-
-    if centroids is None:
-        centroids = build_ivf_index(emb, n_clusters=n_clusters, iters=iters)
-    n_clusters = len(centroids)
-    cand = assign_clusters(emb, centroids).select(
-        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"),
-        _norm(F.col("embedding")).alias("cn"), F.col("cluster_id").alias("cc")
-    )
+    cand = _vectors(assign_clusters(emb, centroids), "cand", F.col("cluster_id").alias("cc"))
     dists = F.array(*[_sqdist(F.col("embedding"), F.lit(c)) for c in centroids])
     probe_ids = F.slice(
-        F.transform(F.array_sort(F.zip_with(dists, F.sequence(F.lit(0), F.lit(n_clusters - 1)),
+        F.transform(F.array_sort(F.zip_with(dists, F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
                                             lambda dv, i: F.struct(dv.alias("d"), i.alias("i")))),
                     lambda s: s.getField("i")),
         1, n_probe,
     )
-    q = (
-        emb.filter(F.col("vec_id").isin(query_ids))
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
-                _norm(F.col("embedding")).alias("qn"),
-                F.explode(probe_ids).alias("probe_cluster"))
+    q = _vectors(
+        emb.filter(F.col("vec_id").isin(query_ids)), "query", F.explode(probe_ids).alias("probe_cluster")
     )
-    scored = (
-        F.broadcast(q)
-        .join(cand, F.col("probe_cluster") == F.col("cc"))
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("cosine", F.round(_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 6))
-        .select("query_id", "cand_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(_scored(F.broadcast(q).join(cand, F.col("probe_cluster") == F.col("cc"))), k)
 
 
 def materialize_ivf(emb: DataFrame, centroids: list[list[float]], path: str) -> None:
@@ -770,7 +742,7 @@ def materialize_ivf(emb: DataFrame, centroids: list[list[float]], path: str) -> 
     coarse cluster, so a probe's ``cluster_id IN (...)`` filter prunes
     whole partitions at the file listing, before any IO.
 
-    Build once (with :func:`build_ivf_index` centroids), query many times
+    Build once (with :func:`kmeans_centroids` centroids), query many times
     with :func:`cosine_topk_ivf_materialized`."""
     assign_clusters(emb, centroids).write.mode("overwrite").partitionBy("cluster_id").parquet(path)
 
@@ -805,39 +777,20 @@ def cosine_topk_ivf_materialized(
     q = spark.createDataFrame(
         probe_rows, "query_id long, qe array<float>, probe_cluster int"
     ).withColumn("qn", _norm(F.col("qe")))
-    cand = (
+    cand = _vectors(
         spark.read.parquet(index_path)
         # literal IN over the partition column → partition pruning at the
         # file listing (visible as PartitionFilters in the scan node)
-        .filter(F.col("cluster_id").isin(sorted(probe_union)))
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("ce"),
-            _norm(F.col("embedding")).alias("cn"),
-            F.col("cluster_id").cast("int").alias("cc"),
-        )
+        .filter(F.col("cluster_id").isin(sorted(probe_union))),
+        "cand",
+        F.col("cluster_id").cast("int").alias("cc"),
     )
-    from pyspark.sql import Window
-
-    scored = (
-        F.broadcast(q)
-        .join(cand, F.col("probe_cluster") == F.col("cc"))
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn")), 6),
-        )
-        .select("query_id", "cand_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(_scored(F.broadcast(q).join(cand, F.col("probe_cluster") == F.col("cc"))), k)
 
 
-def dedup_embedding_cosine(
-    emb: DataFrame, threshold: float = 0.3, n_planes: int = 8
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs — the 5th dedup family member
-    (driver mandate): (vec_a, vec_b, cosine) with cosine ≥ ``threshold``.
+def dedup_embedding_cosine(emb: DataFrame) -> DataFrame:
+    """Embedding-cosine near-dup pairs — the 5th dedup family member:
+    (vec_a, vec_b, cosine) with cosine ≥ ``DEDUP_EMB_THRESHOLD``.
 
     Scale shape: candidate pairs come from a single random-hyperplane LSH
     bucket self-join (same-bucket only — never the N² cross join), then the
@@ -846,10 +799,15 @@ def dedup_embedding_cosine(
     engines (Spark ``aggregate``, DuckDB ``list_sum(list_transform(...))``)
     so the sign bits agree bit-for-bit and the oracle can mirror the
     bucketing exactly.  High-similarity pairs (the dedup regime, cos≥0.9)
-    collide with probability p_plane^n_planes ≈ 0.3 per table — production
-    raises recall by unioning several plane sets (cosine_topk_lsh's
-    multi-table machinery); the registered single-table variant keeps the
-    SQL twin tractable while exercising the full bucket→exact-verify path.
+    collide with probability p_plane^DEDUP_EMB_PLANES ≈ 0.3 per table —
+    production raises recall by unioning several plane sets
+    (cosine_topk_lsh's multi-table machinery); the registered single-table
+    variant keeps the SQL twin tractable while exercising the full
+    bucket→exact-verify path.
+
+    Building the query runs two jobs: the single-row ``first()`` that probes
+    the embedding width for the planes, and the eager ``localCheckpoint`` of
+    the bucketed side (one row per vector: id, embedding, bucket, norm).
     """
     # literal planes (see _plane_row) — parity with the oracle's runtime
     # md5(p||','||d) is by construction; zip_with pads the shorter side
@@ -870,31 +828,26 @@ def dedup_embedding_cosine(
                 > 0,
                 F.lit("1"),
             ).otherwise(F.lit("0"))
-            for p in range(n_planes)
+            for p in range(DEDUP_EMB_PLANES)
         ]
     )
-    # norms (and the 8 plane folds) are per-VECTOR, not per-pair: compute
+    # norms (and the plane folds) are per-VECTOR, not per-pair: compute
     # them once on the 20k-row side and checkpoint, instead of re-folding
-    # both norms inside every one of the ~900k same-bucket pairs (sf1.0) —
-    # 3 interpreted 64-element folds per pair drop to 1 (the dot).  The
-    # division sees the exact same sqrt values, so round(...,6) and the
-    # oracle hash are bit-identical.
+    # both norms inside every one of the ~900k same-bucket pairs (sf1.0);
+    # the division sees the same sqrt values, so the oracle hash is unchanged
     withb = emb.select(
         "vec_id", "embedding", bucket.alias("bucket"), _norm(F.col("embedding")).alias("nrm")
     ).localCheckpoint(eager=True)
-    a = withb.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"), "bucket",
-    )
-    b = withb.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"), "bucket",
+    a, b = (
+        withb.select(F.col("vec_id").alias(f"vec_{x}"), F.col("embedding").alias(f"e{x}"),
+                     F.col("nrm").alias(f"n{x}"), "bucket")
+        for x in "ab"
     )
     return (
         a.join(b, "bucket")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", F.round(_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6))
-        .filter(F.col("cosine") >= threshold)
+        .withColumn("cosine", _cosine(F.col("ea"), F.col("na"), F.col("eb"), F.col("nb")))
+        .filter(F.col("cosine") >= DEDUP_EMB_THRESHOLD)
         .select("vec_a", "vec_b", "cosine")
     )
 

@@ -126,8 +126,9 @@ def test_ann_ivf_recall_and_pruning(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qids = [0, 1, 2, 3, 4]
     k = 10
+    centroids = textops.kmeans_centroids(emb, k=16, iters=3)
     bf = textops.cosine_topk_bruteforce(emb, qids, k=k)
-    ivf = textops.cosine_topk_ivf(emb, qids, k=k, n_clusters=16, n_probe=8)
+    ivf = textops.cosine_topk_ivf(emb, qids, centroids, k=k, n_probe=8)
     truth = {(r["query_id"], r["cand_id"]) for r in bf.collect()}
     got = {(r["query_id"], r["cand_id"]) for r in ivf.collect()}
     recall = len(truth & got) / len(truth)
@@ -135,7 +136,6 @@ def test_ann_ivf_recall_and_pruning(spark):
     # recall must beat that baseline meaningfully
     assert recall >= 0.55, f"recall@{k} = {recall:.3f}"
     # pruning really happens: a probed scan covers less than the corpus
-    centroids = textops.kmeans_centroids(emb, k=16, iters=3)
     assigned = textops.assign_clusters(emb, centroids)
     sizes = {r["cluster_id"]: r["n"] for r in assigned.groupBy("cluster_id").agg(F.count("*").alias("n")).collect()}
     assert len(sizes) > 1, "kmeans collapsed to one cluster"

@@ -292,7 +292,7 @@ def test_lsh_null_embedding_row_no_crash(spark):
     rows = [(i, [float(i == j) for j in range(dim)]) for i in range(6)]
     rows.append((6, None))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = textops.cosine_topk_lsh(emb, [0], k=3, n_planes=4, n_tables=2)
+    out = textops.cosine_topk_lsh(emb, [0], k=3)
     got = out.collect()  # must not raise
     assert all(r["cand_id"] != 0 for r in got)
 
